@@ -1,8 +1,9 @@
 """Aggregation operators (SURVEY.md §2.2 R3, §2.4 extension aggs).
 
 Reference surface: one group-count (``value_counts``, Angelo_ETL_Task.py:173)
-and one read-back MIN (Angelo_ETL_Task.py:331). Extensions: the full agg set,
-rollup/cube/grouping sets, approx distinct.
+and one read-back MIN (Angelo_ETL_Task.py:331). Queries call
+``groupBy().agg()`` / ``rollup`` / ``cube`` directly; this module holds the
+shared pieces: deterministic decimal sums/averages and exact multi-quantiles.
 
 Scale notes: every ``groupBy().agg()`` is a partial (map-side) aggregate
 followed by one shuffle on the grouping key — Spark does the combine
@@ -39,64 +40,6 @@ def davg(col: str | Column, scale: int = 2) -> Column:
     """Deterministic average: exact decimal sum ÷ count in IEEE double."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(dec(c, 18, scale)).cast("double") / F.count(c)
-
-
-def group_count(df: DataFrame, keys: Sequence[str], alias: str = "cnt") -> DataFrame:
-    """Frequency per key — the reference's ``value_counts`` (:173)."""
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(alias))
-
-
-def grouped_agg(
-    df: DataFrame, keys: Sequence[str], aggs: dict[str, Column]
-) -> DataFrame:
-    """groupBy().agg() with named output columns."""
-    return df.groupBy(*keys).agg(*[c.alias(n) for n, c in aggs.items()])
-
-
-def rollup_agg(
-    df: DataFrame, keys: Sequence[str], aggs: dict[str, Column]
-) -> DataFrame:
-    """ROLLUP(keys): hierarchical subtotals + grand total."""
-    return df.rollup(*keys).agg(*[c.alias(n) for n, c in aggs.items()])
-
-
-def cube_agg(df: DataFrame, keys: Sequence[str], aggs: dict[str, Column]) -> DataFrame:
-    """CUBE(keys): all subtotal combinations."""
-    return df.cube(*keys).agg(*[c.alias(n) for n, c in aggs.items()])
-
-
-def grouping_sets_agg(
-    df: DataFrame,
-    sets: Sequence[Sequence[str]],
-    agg_sql: dict[str, str],
-) -> DataFrame:
-    """GROUPING SETS via the SQL path (Catalyst expands to one Expand node —
-    a single pass over the input, not one scan per set).
-
-    ``agg_sql`` maps output name → SQL aggregate expression string.
-    """
-    keys = sorted({k for s in sets for k in s})
-    df.createOrReplaceTempView("_gs_input")
-    sets_sql = ", ".join("(" + ", ".join(s) + ")" for s in sets)
-    aggs_sql = ", ".join(f"{expr} AS {name}" for name, expr in agg_sql.items())
-    return df.sparkSession.sql(
-        f"SELECT {', '.join(keys)}, {aggs_sql} FROM _gs_input "
-        f"GROUP BY GROUPING SETS ({sets_sql})"
-    )
-
-
-def approx_distinct(
-    df: DataFrame, col: str, rsd: float = 0.05, alias: str = "approx_distinct"
-) -> DataFrame:
-    """HyperLogLog++ distinct estimate — one pass, tiny sketch per partition,
-    merge on the driver; the scale answer when exact COUNT(DISTINCT) would
-    shuffle every key."""
-    return df.agg(F.approx_count_distinct(col, rsd).alias(alias))
-
-
-def exact_distinct_count(df: DataFrame, cols: Sequence[str], alias: str = "cnt") -> DataFrame:
-    """Exact COUNT(DISTINCT cols...): expands to a two-stage aggregate."""
-    return df.agg(F.count_distinct(*[F.col(c) for c in cols]).alias(alias))
 
 
 def exact_quantiles(

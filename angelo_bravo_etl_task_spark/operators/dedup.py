@@ -5,8 +5,10 @@ Reference surface: the last-wins lookup-map build
 resolve to the LAST row in file order. Spark has no implicit row order, so
 the operator takes an explicit order column (SURVEY.md §7.4).
 
-LLM-pipeline surface (100 TB training-data dedup): exact, normalized-text,
-MinHash+LSH, SimHash, and n-gram-Jaccard near-dup. All are shuffle-on-key
+LLM-pipeline surface (100 TB training-data dedup): content-hash and
+normalized-text exact dedup, and near-dup over ONE shared gram-hash frame
+(:func:`gram_hashes_frame`) — MinHash+LSH candidates (self-join or
+probe-vs-index), gram-Jaccard confirm, and SimHash. All are shuffle-on-key
 group-bys or bucket-joins — nothing collects to the driver; candidate
 generation is always blocked/banded so no O(n²) pair explosion.
 """
@@ -43,16 +45,6 @@ def last_wins(
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def exact_dedup(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """Exact duplicate removal on ``cols`` (default: all columns).
-
-    ``dropDuplicates`` is a hash aggregate — map-side partial dedup first,
-    then one shuffle on the dedup key. The survivor row is arbitrary; use
-    :func:`last_wins` when survivor identity matters.
-    """
-    return df.dropDuplicates(list(cols) if cols else None)
 
 
 def exact_dedup_by_hash(
@@ -97,12 +89,13 @@ def normalized_dedup(
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dup.
 #
-# Pipeline: shingle (word n-grams) → per-shingle 64-bit hashes → k minhash
-# values (one per permutation, computed as min over xor-mixed hashes — the
-# standard "one hash function, k mixers" trick) → band the signature → exact
-# group-by on (band_id, band_hash) → candidate pairs → optional exact Jaccard
-# confirm. Every step is a map or a key-shuffle; candidate volume is bounded
-# by band collisions, never n².
+# Pipeline: word n-grams → per-gram 64-bit hashes (:func:`gram_hashes_frame`,
+# materialized once and shared by every consumer) → k minhash values (one per
+# permutation, computed as min over re-mixed hashes — the standard "one hash
+# function, k mixers" trick) → band the signature → exact equi-join on
+# (band, band_hash) → candidate pairs → optional exact gram-Jaccard confirm.
+# Every step is a map or a key-shuffle; candidate volume is bounded by band
+# collisions, never n².
 
 
 def shingles(col: Column, n: int = 3) -> Column:
@@ -175,36 +168,22 @@ def shingle_hashes(col: Column, n: int = 3) -> Column:
 
 
 def _permutation_mix(i: int):
+    """Permutation ``i`` of the minhash signature as a Column lambda — the
+    reference spec: signature slot i is ``array_min(transform(bh,
+    _permutation_mix(i)))``. The engine runs :func:`_minhash_signature_arrow`;
+    the parity tests compare it against this spec."""
     # closure factory: a 1-arg lambda so F.transform doesn't treat the second
     # parameter as the element index
     return lambda h: F.xxhash64(h, F.lit(i))
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """k-element minhash signature over a shingle array.
-
-    Each shingle STRING is hashed exactly once (the expensive part); the k
-    "permutations" then re-mix the resulting int64 with xxhash64(h, i) —
-    a cheap long-hash, so cost is O(shingles + k·shingles·long_mix) instead
-    of O(k·shingles·string_hash). All JVM-side, no Python. Returns
-    array<bigint> of length ``num_hashes``.
-    """
-    base = F.transform(shingle_col, lambda s: F.xxhash64(s))
-    return F.array(
-        *[
-            F.array_min(F.transform(base, _permutation_mix(i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def _minhash_signature_arrow(num_hashes: int = 64):
     """Arrow-vectorized minhash: array<int64> shingle hashes → k-element
-    signature, BIT-EXACT with the Column path (``minhash_signature`` /
-    the staged build in ``minhash_lsh_candidates``), parity-tested in
+    signature, BIT-EXACT with the Column-expression spec
+    (:func:`_permutation_mix`), parity-tested in
     ``tests/test_minhash_parity.py``.
 
-    The Column path evaluates ``array_min(transform(bh, xxhash64(h, i)))``
+    The Column spec evaluates ``array_min(transform(bh, xxhash64(h, i)))``
     k times — k interpreted Catalyst lambda dispatches per shingle. Here
     the same math runs as numpy C: Spark's ``xxhash64(h, lit(i))`` chains
     XXH64 over its children (``hashInt(i, hashLong(h, 42))``), and both
@@ -345,25 +324,12 @@ def _band_explode(
 
 
 def _signature_select(
-    hashed: DataFrame,
-    id_col: str,
-    bh_col: str,
-    num_hashes: int,
-    use_arrow: bool,
+    hashed: DataFrame, id_col: str, bh_col: str, num_hashes: int
 ) -> DataFrame:
-    if use_arrow:
-        return hashed.select(
-            F.col(id_col),
-            _minhash_signature_arrow(num_hashes)(F.col(bh_col)).alias("_sig"),
-        )
+    """(id, gram hashes) → (id, _sig): the k-slot minhash signature."""
     return hashed.select(
         F.col(id_col),
-        F.array(
-            *[
-                F.array_min(F.transform(F.col(bh_col), _permutation_mix(i)))
-                for i in range(num_hashes)
-            ]
-        ).alias("_sig"),
+        _minhash_signature_arrow(num_hashes)(F.col(bh_col)).alias("_sig"),
     )
 
 
@@ -373,64 +339,26 @@ def banded_minhash_from_hashes(
     bh_col: str = "_bh",
     num_hashes: int = 64,
     bands: int = 16,
-    use_arrow: bool = True,
 ) -> DataFrame:
-    """Banded signatures from a PRECOMPUTED gram-hash frame
-    (:func:`gram_hashes_frame`). No checkpoint here: the input frame is
-    already materialized, and the signature map runs once per consumer —
-    callers that fan a side out more than once checkpoint themselves."""
+    """Per-document banded MinHash signatures (id, band, band_hash) from a
+    PRECOMPUTED gram-hash frame (:func:`gram_hashes_frame`).
+
+    At 100 TB this frame IS the near-dup index a production pipeline
+    persists (bucketed by (band, band_hash)); here it is built inline per
+    query. No checkpoint here: the input frame is already materialized, and
+    the signature map runs once per consumer — callers that fan a side out
+    more than once checkpoint themselves."""
     return _band_explode(
-        _signature_select(hashed, id_col, bh_col, num_hashes, use_arrow),
+        _signature_select(hashed, id_col, bh_col, num_hashes),
         id_col,
         num_hashes,
         bands,
     )
 
 
-def banded_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """Per-document banded MinHash signatures: (id, band, band_hash).
-
-    The shared build stage of both the symmetric self-join
-    (:func:`minhash_lsh_candidates`) and the asymmetric probe-vs-index
-    join (:func:`lsh_probe_candidates`). At 100 TB this frame IS the
-    near-dup index a production pipeline persists (bucketed by
-    (band, band_hash)); here it is built inline per query.
-    """
-    # staged projections so the shingle hashes materialize ONCE per row (a
-    # single nested expression would re-derive them for every one of the k
-    # permutations)
-    hashed = _spread(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col),
-        shingle_hashes(F.col(text_col), shingle_n).alias("_bh"),
-    )
-    sig = _signature_select(hashed, id_col, "_bh", num_hashes, use_arrow)
-    # Eager local checkpoint of the per-DOC signatures: a downstream join
-    # would otherwise (a) launch BOTH join sides concurrently, each
-    # computing the full signature pipeline (persist() alone is lazy — the
-    # two sides race before the cache fills), and (b) let constraint
-    # inference push the whole signature expression into the file scan as
-    # an IsNotNull filter — single-partition and pre-repartition.
-    # Checkpointing materializes once, truncates lineage, and the blocks
-    # are GC'd by the ContextCleaner when the frame drops out of scope (no
-    # unpersist bookkeeping). Checkpoint BEFORE the bands× explode —
-    # banding is a trivial JVM map, cheaper recomputed per join side than
-    # stored. Signatures are tiny next to the text — safe at any scale.
-    sig = sig.localCheckpoint(eager=True)
-    return _band_explode(sig, id_col, num_hashes, bands)
-
-
 def _self_join_candidates(banded: DataFrame, id_col: str) -> DataFrame:
     """(id, band, band_hash) → distinct (id_a < id_b) bucket collisions —
-    the ONE self-join body shared by the string-input and precomputed-hash
-    LSH candidate functions (ADVICE r11: join fixes land in one place)."""
+    the one (band, band_hash) self-join body."""
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -454,100 +382,9 @@ def _probe_join_candidates(
     bp: DataFrame, bi: DataFrame, id_col: str
 ) -> DataFrame:
     """Banded probe frame × banded index frame → distinct
-    (probe_id, index_id) bucket hits — the shared probe-join body."""
+    (probe_id, index_id) bucket hits — the one probe-join body."""
     bp = bp.alias("p")
     bi = bi.alias("i")
-    return (
-        bp.join(
-            bi,
-            on=[
-                F.col("p.band") == F.col("i.band"),
-                F.col("p.band_hash") == F.col("i.band_hash"),
-            ],
-        )
-        .select(
-            F.col(f"p.{id_col}").alias("probe_id"),
-            F.col(f"i.{id_col}").alias("index_id"),
-        )
-        .distinct()
-    )
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash-LSH.
-
-    rows = num_hashes/bands; P(candidate) ≈ 1-(1-j^rows)^bands for Jaccard j.
-    Defaults (64 hashes, 16 bands × 4 rows) catch j ≳ 0.5 reliably.
-
-    Scale shape: signature build is a pure map; banding explodes each doc
-    into ``bands`` rows; the self-join on (band, band_hash) is an equi-join
-    whose cost is bounded by real collisions. Returns (id_a, id_b) with
-    id_a < id_b, distinct.
-
-    ``use_arrow`` picks the vectorized signature path (default; bit-exact
-    with the expression path — tests/test_minhash_parity.py); the pure
-    Column expression is kept as the executable spec and for environments
-    without Arrow.
-    """
-    banded = banded_minhash(
-        df, text_col, id_col, num_hashes, bands, shingle_n, use_arrow
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col(f"a.band") == F.col("b.band"),
-                F.col(f"a.band_hash") == F.col("b.band_hash"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-
-
-def lsh_probe_candidates(
-    probe: DataFrame,
-    index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """Asymmetric banded-LSH candidates: probe docs vs an indexed corpus.
-
-    The INCREMENTAL dedup shape: a (small) delta of new documents is
-    checked against a (huge) existing corpus without the corpus ever
-    self-joining — the equi-join on (band, band_hash) touches only the
-    index buckets the probe's band hashes actually hit. At 100 TB the
-    index side is a PRECOMPUTED, persisted banded-signature table
-    (bucketed by band_hash so the probe join is shuffle-free on the
-    corpus side); cost is O(|delta| · bands) probe rows × bucket hit
-    size, independent of corpus row count. Returns distinct
-    (probe_id, index_id) pairs; ids may overlap between frames — the
-    caller guarantees disjointness (incremental pipelines key deltas
-    into fresh id space).
-    """
-    bp = banded_minhash(
-        probe, text_col, id_col, num_hashes, bands, shingle_n, use_arrow
-    ).alias("p")
-    bi = banded_minhash(
-        index, text_col, id_col, num_hashes, bands, shingle_n, use_arrow
-    ).alias("i")
     return (
         bp.join(
             bi,
@@ -569,34 +406,34 @@ def minhash_lsh_candidates_from_hashes(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
-    use_arrow: bool = True,
 ) -> DataFrame:
-    """:func:`minhash_lsh_candidates` over a PRECOMPUTED gram-hash frame
-    (:func:`gram_hashes_frame`) — same (id_a, id_b) pair set; the caller's
-    single text pass is shared with the confirm stage (optimization r11).
-    The signature frame still checkpoints before the self-join (it feeds
-    both sides)."""
+    """Candidate near-dup pairs via banded MinHash-LSH over a PRECOMPUTED
+    gram-hash frame (:func:`gram_hashes_frame`) — the caller's single text
+    pass is shared with the confirm stage.
+
+    rows = num_hashes/bands; P(candidate) ≈ 1-(1-j^rows)^bands for Jaccard j.
+    Defaults (64 hashes, 16 bands × 4 rows) catch j ≳ 0.5 reliably.
+
+    Scale shape: signature build is a pure map; banding explodes each doc
+    into ``bands`` rows; the self-join on (band, band_hash) is an equi-join
+    whose cost is bounded by real collisions. Returns (id_a, id_b) with
+    id_a < id_b, distinct.
+    """
+    # Eager local checkpoint of the per-DOC signatures: the self-join would
+    # otherwise (a) launch BOTH join sides concurrently, each computing the
+    # full signature pipeline (persist() alone is lazy — the two sides race
+    # before the cache fills), and (b) let constraint inference push the
+    # whole signature expression into the scan as an IsNotNull filter.
+    # Checkpointing materializes once, truncates lineage, and the blocks are
+    # GC'd by the ContextCleaner when the frame drops out of scope (no
+    # unpersist bookkeeping). Checkpoint BEFORE the bands× explode — banding
+    # is a trivial JVM map, cheaper recomputed per join side than stored.
+    # Signatures are tiny next to the text — safe at any scale.
     sig = _signature_select(
-        hashed, id_col, "_bh", num_hashes, use_arrow
+        hashed, id_col, "_bh", num_hashes
     ).localCheckpoint(eager=True)
     banded = _band_explode(sig, id_col, num_hashes, bands)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.band_hash") == F.col("b.band_hash"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    return _self_join_candidates(banded, id_col)
 
 
 def lsh_probe_candidates_from_hashes(
@@ -605,31 +442,30 @@ def lsh_probe_candidates_from_hashes(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
-    use_arrow: bool = True,
 ) -> DataFrame:
-    """:func:`lsh_probe_candidates` over PRECOMPUTED gram-hash frames
-    (:func:`gram_hashes_frame`) — same (probe_id, index_id) pair set, but
-    the caller's one text pass per side is shared with the confirm stage
-    and any audits instead of re-shingling here (optimization r11)."""
-    bp = banded_minhash_from_hashes(
-        probe_hashed, id_col, "_bh", num_hashes, bands, use_arrow
-    ).alias("p")
-    bi = banded_minhash_from_hashes(
-        index_hashed, id_col, "_bh", num_hashes, bands, use_arrow
-    ).alias("i")
-    return (
-        bp.join(
-            bi,
-            on=[
-                F.col("p.band") == F.col("i.band"),
-                F.col("p.band_hash") == F.col("i.band_hash"),
-            ],
-        )
-        .select(
-            F.col(f"p.{id_col}").alias("probe_id"),
-            F.col(f"i.{id_col}").alias("index_id"),
-        )
-        .distinct()
+    """Asymmetric banded-LSH candidates: probe docs vs an indexed corpus,
+    both as PRECOMPUTED gram-hash frames (:func:`gram_hashes_frame`).
+
+    The INCREMENTAL dedup shape: a (small) delta of new documents is
+    checked against a (huge) existing corpus without the corpus ever
+    self-joining — the equi-join on (band, band_hash) touches only the
+    index buckets the probe's band hashes actually hit. At 100 TB the
+    index side is a PRECOMPUTED, persisted banded-signature table
+    (bucketed by band_hash so the probe join is shuffle-free on the
+    corpus side); cost is O(|delta| · bands) probe rows × bucket hit
+    size, independent of corpus row count. Returns distinct
+    (probe_id, index_id) pairs; ids may overlap between frames — the
+    caller guarantees disjointness (incremental pipelines key deltas
+    into fresh id space).
+    """
+    return _probe_join_candidates(
+        banded_minhash_from_hashes(
+            probe_hashed, id_col, "_bh", num_hashes, bands
+        ),
+        banded_minhash_from_hashes(
+            index_hashed, id_col, "_bh", num_hashes, bands
+        ),
+        id_col,
     )
 
 
@@ -640,15 +476,18 @@ def jaccard_pairs_from_hashes(
     threshold: float = 0.7,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Exact gram Jaccard over candidate pairs, from PRECOMPUTED gram-hash
-    frames: ``id_a`` keys ``a_hashed``, ``id_b`` keys ``b_hashed``.
+    """Exact gram Jaccard over candidate pairs (the confirm stage after
+    LSH), from PRECOMPUTED gram-hash frames: ``id_a`` keys ``a_hashed``,
+    ``id_b`` keys ``b_hashed``.
 
-    |A∩B|/|A∪B| over distinct 64-bit gram hashes equals the string-gram
-    jaccard of :func:`jaccard_pairs` except under an xxhash64 collision
-    *within one candidate pair's gram sets* (~|grams|²/2⁶⁴ — negligible and
-    deterministic; every caller is oracle-verified tri-SF). The win: no
-    second normalize+shingle pass over the corpus, and the joins carry
-    8-byte hash arrays instead of n-gram strings (guide §2.3)."""
+    Joins the gram-hash arrays back onto the (id_a, id_b) candidates — two
+    broadcast-able joins when the candidate set is small, shuffled
+    otherwise — and computes |A∩B|/|A∪B| with JVM array intrinsics. Over
+    distinct 64-bit gram hashes this equals the string-gram Jaccard except
+    under an xxhash64 collision *within one candidate pair's gram sets*
+    (~|grams|²/2⁶⁴ — negligible and deterministic; every caller is
+    oracle-verified tri-SF). The joins carry 8-byte hash arrays instead of
+    n-gram strings (guide §2.3)."""
     out = (
         candidates.join(
             a_hashed.select(
@@ -671,48 +510,6 @@ def jaccard_pairs_from_hashes(
     )
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    candidates: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs (confirm stage after LSH).
-
-    Joins shingle arrays back onto the (id_a, id_b) candidates — two
-    broadcast-able joins when the candidate set is small, shuffled otherwise
-    — and computes |A∩B|/|A∪B| with JVM array intrinsics.
-
-    The shingle frame is spread across cores (the testdata parquet is one
-    scan partition) and eagerly checkpointed: it feeds BOTH join sides, and
-    without materialization each side would re-derive the full
-    normalize+shingle expression over the corpus — the most expensive map
-    in the pipeline, paid twice.
-    """
-    sh = (
-        _spread(df.select(F.col(id_col), F.col(text_col)))
-        .select(
-            F.col(id_col), shingles(F.col(text_col), shingle_n).alias("_sh")
-        )
-        .localCheckpoint(eager=True)
-    )
-    out = (
-        candidates.join(sh.withColumnRenamed(id_col, "id_a"), on="id_a")
-        .withColumnRenamed("_sh", "_sh_a")
-        .join(sh.withColumnRenamed(id_col, "id_b"), on="id_b")
-        .withColumnRenamed("_sh", "_sh_b")
-    )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size(F.array_union("_sh_a", "_sh_b"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        out.select("id_a", "id_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
 def simhash_quadrants(hashes: Column) -> Column:
     """64-bit SimHash fingerprint as 4×16-bit quadrants (array<int>, len 4),
     computed from a MATERIALIZED array of per-shingle int64 hashes (callers
@@ -724,6 +521,9 @@ def simhash_quadrants(hashes: Column) -> Column:
     quadrants (instead of one int64) keeps arithmetic overflow-free under
     ANSI mode and gives the LSH blocking key for free. All higher-order
     array functions — no UDF.
+
+    The reference spec of :func:`_simhash_quadrants_arrow`, which the
+    engine runs; the parity tests compare the two.
     """
 
     def vote_bit(pos: Column) -> Column:
@@ -806,30 +606,21 @@ def simhash_near_dups(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     shingle_n: int = 2,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming.
 
     Candidate generation blocks on the 16-bit quadrants (pigeonhole: any
     pair within Hamming 3 must agree on at least one of 4 quadrants), so the
     join is equi on (quadrant_idx, quadrant_bits), never a cross product.
-
-    ``use_arrow`` picks the vectorized fingerprint path (default); the pure
-    Column-expression path (:func:`simhash_quadrants`) is kept as the
-    executable spec and for environments without Arrow.
+    Fingerprints come from the Arrow path (:func:`_simhash_quadrants_arrow`).
     """
     hashed = _spread(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col),
         shingle_hashes(F.col(text_col), shingle_n).alias("_bh"),
     )
-    if use_arrow:
-        fp = hashed.select(
-            F.col(id_col), _simhash_quadrants_arrow()(F.col("_bh")).alias("_fp")
-        )
-    else:
-        fp = hashed.select(
-            F.col(id_col), simhash_quadrants(F.col("_bh")).alias("_fp")
-        )
+    fp = hashed.select(
+        F.col(id_col), _simhash_quadrants_arrow()(F.col("_bh")).alias("_fp")
+    )
     # eager checkpoint of the per-DOC fingerprints before the self-join:
     # compute them ONCE (a lazy persist would let both join-side stages race
     # through the full pipeline concurrently) and truncate lineage so

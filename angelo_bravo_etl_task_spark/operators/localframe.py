@@ -28,9 +28,10 @@ def local_rows_df(
 ) -> DataFrame:
     """``spark.createDataFrame(rows, schema)`` for small literal frames,
     via the Arrow/pandas path (one driver-side conversion, zero Python
-    worker tasks at execution). ``schema`` is a DDL string or StructType;
-    falls back to the classic path if the Arrow conversion cannot
-    represent a value."""
+    worker tasks at execution). ``schema`` is a DDL string or StructType.
+    Values Arrow cannot convert take Spark's own non-Arrow fallback
+    (``spark.sql.execution.arrow.pyspark.fallback.enabled``); a row whose
+    arity does not match the schema raises."""
     import pandas as pd
     from pyspark.sql.types import StructType, _parse_datatype_string
 
@@ -39,11 +40,9 @@ def local_rows_df(
         if isinstance(schema, StructType)
         else _parse_datatype_string(schema)
     )
-    names = [f.name for f in struct.fields]
-    try:
-        pdf = pd.DataFrame(
-            [tuple(r) for r in rows], columns=names, dtype=object
-        )
-        return spark.createDataFrame(pdf, schema=struct)
-    except Exception:  # pragma: no cover — safety net for odd types
-        return spark.createDataFrame([tuple(r) for r in rows], schema)
+    pdf = pd.DataFrame(
+        [tuple(r) for r in rows],
+        columns=[f.name for f in struct.fields],
+        dtype=object,
+    )
+    return spark.createDataFrame(pdf, schema=struct)

@@ -8,22 +8,8 @@ CASE/WHEN stays in whole-stage codegen, and nothing leaves the JVM.
 
 from __future__ import annotations
 
-from typing import Mapping
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def with_columns(df: DataFrame, cols: Mapping[str, Column]) -> DataFrame:
-    """Bulk column construction — single projection node, not N chained
-    withColumn calls (each of which re-analyzes the plan)."""
-    return df.withColumns(dict(cols))
-
-
-def literals(**values: object) -> dict[str, Column]:
-    """Fixed-value columns (reference :199-237). None → typed NULL via a
-    later .cast by the caller if needed; Catalyst constant-folds these."""
-    return {name: F.lit(v) for name, v in values.items()}
 
 
 def case_when(pairs: list[tuple[Column, object]], default: object = None) -> Column:

@@ -20,11 +20,6 @@ def union_all(*dfs: DataFrame, by_name: bool = True) -> DataFrame:
     return reduce(lambda a, b: a.union(b), dfs)
 
 
-def union_distinct(*dfs: DataFrame) -> DataFrame:
-    """UNION (set semantics — adds one dedup shuffle over all columns)."""
-    return union_all(*dfs).dropDuplicates()
-
-
 def intersect(a: DataFrame, b: DataFrame, keep_dups: bool = False) -> DataFrame:
     return a.intersectAll(b) if keep_dups else a.intersect(b)
 

@@ -93,28 +93,6 @@ def _hyperplane(dim: int, plane: int, seed: int) -> list[float]:
     return out
 
 
-def random_hyperplane_signature(
-    vec: Column, dim: int, num_planes: int = 16, seed: int = 42
-) -> Column:
-    """Sign-of-projection LSH signature (array<int> of 0/1, len num_planes).
-
-    Coefficients are precomputed on the driver and embedded as LITERAL
-    arrays — per-row cost is just num_planes × dim multiply-adds; nothing is
-    re-derived per row.
-    """
-
-    def plane_bit(p: int) -> Column:
-        coeffs = F.array(*[F.lit(w) for w in _hyperplane(dim, p, seed)])
-        proj = F.aggregate(
-            F.zip_with(vec, coeffs, lambda x, w: x.cast("double") * w),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return F.when(proj >= 0, 1).otherwise(0)
-
-    return F.array(*[plane_bit(p) for p in range(num_planes)])
-
-
 def _signatures_arrow(dim: int, num_planes: int, num_tables: int, seed: int = 42):
     """Arrow-vectorized multi-table signatures: one numpy matmul computes
     every (table, plane) projection for a whole batch — versus one

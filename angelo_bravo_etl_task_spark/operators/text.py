@@ -1,9 +1,10 @@
 """Text-analysis operators for the training-data pipeline surface.
 
-Language-ID (stopword heuristic), quality scoring (length/punct/stopword
-ratios), token counting (whitespace + BPE-ish regex), and document
-fingerprinting. All pure Column expressions — at 100 TB these run inside
-whole-stage codegen over the parquet scan with zero Python cost.
+Language-ID (stopword heuristic), repetition features, token counting
+(whitespace + BPE-ish regex), and document fingerprinting (md5, rolling
+gram fingerprints, winnowing). Pure Column expressions apart from the Arrow
+winnowing path — at 100 TB these run inside whole-stage codegen over the
+parquet scan with zero Python cost.
 """
 
 from __future__ import annotations
@@ -65,50 +66,6 @@ def detect_language(col: Column) -> Column:
     ]
     best = F.greatest(*scored)
     return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit(None))
-
-
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document quality features + a composite score in [0, 1].
-
-    Features: char/word counts, mean word length, punctuation ratio,
-    uppercase ratio, stopword ratio (en), repetition (distinct/total words).
-    The composite is a fixed, documented linear blend — deterministic
-    arithmetic from integer counts, so it reproduces bit-for-bit anywhere.
-    """
-    t = F.col(text_col)
-    toks = tokens(t)
-    n_char = F.length(t)
-    n_word = F.size(toks)
-    distinct_ratio = F.when(
-        n_word > 0, F.size(F.array_distinct(toks)) / n_word
-    ).otherwise(F.lit(0.0))
-    punct = F.length(F.regexp_replace(t, r"[^\p{P}]", ""))
-    upper = F.length(F.regexp_replace(t, r"[^A-Z]", ""))
-    stop_en = stopword_hits(t, "en")
-    mean_word_len = F.when(n_word > 0, (n_char - n_word + 1) / n_word).otherwise(
-        F.lit(0.0)
-    )
-    punct_ratio = F.when(n_char > 0, punct / n_char).otherwise(F.lit(0.0))
-    upper_ratio = F.when(n_char > 0, upper / n_char).otherwise(F.lit(0.0))
-    stop_ratio = F.when(n_word > 0, stop_en / n_word).otherwise(F.lit(0.0))
-    length_score = F.least(n_word / F.lit(50.0), F.lit(1.0))
-    score = (
-        F.lit(0.35) * length_score
-        + F.lit(0.25) * distinct_ratio
-        + F.lit(0.2) * F.least(stop_ratio * 5, F.lit(1.0))
-        + F.lit(0.2) * (F.lit(1.0) - F.least(punct_ratio * 5, F.lit(1.0)))
-    )
-    return df.select(
-        "*",
-        n_char.alias("q_chars"),
-        n_word.alias("q_words"),
-        F.round(mean_word_len, 6).alias("q_mean_word_len"),
-        F.round(distinct_ratio, 6).alias("q_distinct_ratio"),
-        F.round(punct_ratio, 6).alias("q_punct_ratio"),
-        F.round(upper_ratio, 6).alias("q_upper_ratio"),
-        F.round(stop_ratio, 6).alias("q_stop_ratio"),
-        F.round(score, 6).alias("q_score"),
-    )
 
 
 def word_ngrams(col: Column, n: int) -> Column:
@@ -221,15 +178,6 @@ def winnow_from_grams(grams: Column, window: int = 4) -> Column:
             lambda i: F.array_min(F.slice(grams, i + 1, window)),
         )
     )
-
-
-def winnow_fingerprints(col: Column, k: int = 8, window: int = 4) -> Column:
-    """Convenience composition of :func:`rolling_fingerprints` +
-    :func:`winnow_from_grams` for SMALL inputs only — the inline gram
-    expression re-evaluates per window (see winnow_from_grams). Hot paths
-    must stage: ``df.select(rolling_fingerprints(...).alias("_g"))`` then
-    ``winnow_from_grams(F.col("_g"))``."""
-    return winnow_from_grams(rolling_fingerprints(col, window=k), window)
 
 
 def winnow_arrow(k: int = 8, window: int = 4):

@@ -1,4 +1,4 @@
-"""Window operators (SURVEY.md §2.4: ranking, analytic, frame aggregates).
+"""Window operators (SURVEY.md §2.4: ranking and analytic windows).
 
 Absent from the reference (no windows at all); first-class here because the
 last-wins dedup (R2) and per-group top-k both reduce to ranking windows.
@@ -61,30 +61,3 @@ def with_lag_lead(
         }
     )
 
-
-def running_agg(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-    agg: Column,
-    alias: str = "running",
-) -> DataFrame:
-    """Cumulative aggregate over rows unboundedPreceding..currentRow."""
-    spec = _spec(partition_by, order_by).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return df.withColumn(alias, agg.over(spec))
-
-
-def sliding_agg(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-    agg: Column,
-    preceding: int,
-    following: int = 0,
-    alias: str = "sliding",
-) -> DataFrame:
-    """Row-frame sliding aggregate (moving averages etc.)."""
-    spec = _spec(partition_by, order_by).rowsBetween(-preceding, following)
-    return df.withColumn(alias, agg.over(spec))

@@ -893,7 +893,7 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     positives, so the output EQUALS the SQL-computable ground truth — the
     sketch machinery stays in the measured path, its recall contract is
     what the driver hashes. Scale shape unchanged: signature map →
-    (band, band_hash) equi-join → two shingle equi-joins; never all-pairs."""
+    (band, band_hash) equi-join → two gram-hash equi-joins; never all-pairs."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # Optimization r11: ONE text pass (gram-hash frame) shared by the
     # banded signatures and the exact confirm — before, candidates and

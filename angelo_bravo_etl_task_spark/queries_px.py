@@ -231,7 +231,8 @@ _NORM = _NORM_SQL
 def d5_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard near-dup pairs over a bounded id window
     (the oracle must brute-force the same pairs; the unbounded path is
-    LSH candidates → jaccard_pairs confirm). Ratio = raw IEEE division of
+    minhash_lsh_candidates_from_hashes → jaccard_pairs_from_hashes, as in
+    d3/d7). Ratio = raw IEEE division of
     exact set-size integers — bit-identical across engines."""
     from .operators.dedup import shingle_hashes
     from .operators.partitioning import spread
@@ -981,11 +982,12 @@ _D7_SQL = f"""
 @_register("d7_lsh_dedup_e2e", _D7_SQL)
 def d7_lsh_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPOSED scale dedup path, end to end over the FULL documents
-    table (no id bound anywhere): banded MinHash-LSH candidate generation
-    (operators/dedup.py::minhash_lsh_candidates — signature map, 16-band
-    explode, equi-join on (band, band_hash)) → exact word-3-gram Jaccard
-    confirm at 0.6 (jaccard_pairs — two equi-joins of shingle arrays onto
-    the candidate list) → connected components (operators/graph.py,
+    table (no id bound anywhere): one word-3-gram hash frame
+    (operators/dedup.py::gram_hashes_frame) → banded MinHash-LSH candidate
+    generation (minhash_lsh_candidates_from_hashes — signature map, 16-band
+    explode, equi-join on (band, band_hash)) → exact gram Jaccard confirm
+    at 0.6 (jaccard_pairs_from_hashes — two equi-joins of gram-hash arrays
+    onto the candidate list) → connected components (operators/graph.py,
     iterative hash-min label propagation) → every doc labeled with its
     cluster representative. This is d6's semantics WITHOUT the bounded
     all-pairs pair-gen: no BroadcastNestedLoopJoin appears anywhere in the

@@ -12,6 +12,9 @@ VERDICT r7 item 4: the median-of-3 membership is adaptive —
 `bench_delta --write-median-set` adds any single-run query that swung
 >1.5x round-over-round to bench_median_set.json, which bench.py reads
 instead of a hand-pinned outlier list.
+
+ADVICE r12: the scaling-probe re-runs (`scaleprobe_*`) are reported under
+their own `scale_probe` key and stay out of the registry summary figures.
 """
 
 from __future__ import annotations
@@ -24,7 +27,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import settle_samples  # noqa: E402
+from bench import bench_result, settle_samples  # noqa: E402
 
 
 def test_settle_three_samples_is_median():
@@ -41,6 +44,21 @@ def test_settle_two_samples_is_min_not_max():
 def test_settle_single_sample_stays_advisory():
     t, backed = settle_samples([3.3])
     assert (t, backed) == (3.3, False)
+
+
+def test_scale_probe_kept_out_of_registry_summary():
+    timings = {"px1_loinc_i2b2_pipeline": 2.0, "q1": 1.0, "bad": -1.0}
+    probe = {"scaleprobe_d6_dup_clusters": 30.0,
+             "scaleprobe_cf1_item_item": -1.0}
+    out = bench_result(timings, probe, {"scaleprobe_d6_dup_clusters": 3},
+                       {}, 0.1)
+    assert out["queries"] == timings
+    assert out["scale_probe"] == probe
+    assert out["n_queries"] == 3
+    assert out["sum_all_queries_sec"] == 3.0
+    assert out["mean_query_sec"] == 1.5
+    assert out["value"] == 2.0 and out["error"] is None
+    assert not any(k.startswith("scaleprobe_") for k in out["queries"])
 
 
 def test_median_set_file_seeded_with_known_outliers():

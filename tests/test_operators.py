@@ -31,10 +31,11 @@ def docs(spark):
 
 
 def test_minhash_lsh_finds_planted_dups(docs):
+    h = D.gram_hashes_frame(docs, shingle_n=3)
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in D.minhash_lsh_candidates(
-            docs, num_hashes=32, bands=16, shingle_n=3
+        for r in D.minhash_lsh_candidates_from_hashes(
+            h, num_hashes=32, bands=16
         ).collect()
     }
     assert (1, 2) in pairs  # exact dup always collides
@@ -43,8 +44,11 @@ def test_minhash_lsh_finds_planted_dups(docs):
 
 
 def test_jaccard_confirm(docs):
-    cands = D.minhash_lsh_candidates(docs, num_hashes=32, bands=16)
-    confirmed = D.jaccard_pairs(docs, cands, threshold=0.5).collect()
+    h = D.gram_hashes_frame(docs)
+    cands = D.minhash_lsh_candidates_from_hashes(h, num_hashes=32, bands=16)
+    confirmed = D.jaccard_pairs_from_hashes(
+        h, h, cands, threshold=0.5
+    ).collect()
     by_pair = {(r["id_a"], r["id_b"]): r["jaccard"] for r in confirmed}
     assert by_pair[(1, 2)] == 1.0
     assert all(j >= 0.5 for j in by_pair.values())
@@ -567,3 +571,21 @@ def test_pq_topk_codes_recall_and_determinism(spark, sf_dir):
         ).collect()
     }
     assert rerun == approx
+
+
+def test_local_rows_df_raises_on_wrong_arity(spark):
+    """A generator is materialized once; a row that does not fit the
+    schema raises instead of falling back to an empty frame."""
+    from angelo_bravo_etl_task_spark.operators.localframe import local_rows_df
+
+    ok = local_rows_df(spark, ((i, f"v{i}") for i in range(3)), "k INT, v STRING")
+    assert sorted(tuple(r) for r in ok.collect()) == [
+        (0, "v0"), (1, "v1"), (2, "v2")
+    ]
+
+    def rows():
+        yield (1, "a")
+        yield (2, "b", "extra")
+
+    with pytest.raises(ValueError):
+        local_rows_df(spark, rows(), "k INT, v STRING")

@@ -132,16 +132,22 @@ def test_d7_composition_has_no_nested_loop_join(spark, sf_dir):
     demo's shape, exactly what d7 exists to avoid. connected_components
     executes eagerly (per-round checkpoints), so each stage's plan is
     checked where it is still inspectable: the candidate and confirm
-    frames, plus the final labeled output."""
+    frames, plus the final labeled output. The stages are the ones d7
+    runs: gram_hashes_frame → minhash_lsh_candidates_from_hashes →
+    jaccard_pairs_from_hashes."""
     from angelo_bravo_etl_task_spark.operators.dedup import (
-        jaccard_pairs,
-        minhash_lsh_candidates,
+        gram_hashes_frame,
+        jaccard_pairs_from_hashes,
+        minhash_lsh_candidates_from_hashes,
     )
     from angelo_bravo_etl_task_spark.sources.readers import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    cand = minhash_lsh_candidates(docs)
-    confirmed = jaccard_pairs(docs, cand, threshold=0.6).select("id_a", "id_b")
+    h = gram_hashes_frame(docs)
+    cand = minhash_lsh_candidates_from_hashes(h)
+    confirmed = jaccard_pairs_from_hashes(h, h, cand, threshold=0.6).select(
+        "id_a", "id_b"
+    )
     for frame in (cand, confirmed):
         assert_plan(
             frame,
