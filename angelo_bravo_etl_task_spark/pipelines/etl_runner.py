@@ -26,15 +26,16 @@ import datetime as _dt
 import os
 from typing import Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import HIERARCHY_SCHEMA, LOINC_SCHEMA, i2b2_create_table_sql
-from ..sources.readers import read_csv
+from ..sources.readers import file_position, read_csv
 from ..sources.staging import Fetcher, stage_loinc_inputs
 from ..sources.writers import (
     execute_jdbc_ddl,
     jdbc_table_exists,
+    read_jdbc,
     read_jdbc_min,
     write_csv,
     write_jdbc,
@@ -80,6 +81,7 @@ def run_etl(
     staged = stage_loinc_inputs(staging_dir, fetcher)
     loinc = read_csv(spark, staged["loinc"], LOINC_SCHEMA)
     hierarchy = read_csv(spark, staged["hierarchy"], HIERARCHY_SCHEMA)
+    hierarchy = hierarchy.withColumn("_file_pos", file_position())
 
     # -- sink state: existence probe + IMPORT_DATE read-back (:294-335) --
     exists = jdbc_table_exists(spark, jdbc_url, jdbc_table, **opts)
@@ -96,6 +98,7 @@ def run_etl(
         hierarchy,
         mode=mode,
         now=now,
+        hierarchy_order_col="_file_pos",
         import_date=import_date,
     )
 
@@ -123,14 +126,9 @@ def run_etl(
     # -- verify + export: count and CSV of THIS run's rows (:353-363) -----
     # Re-read the sink filtered on this run's UPDATE_DATE (predicate pushed
     # down over JDBC) so count and file reflect the database's contents.
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", jdbc_url)
-        .option("dbtable", jdbc_table)
+    inserted = read_jdbc(spark, jdbc_url, jdbc_table, **opts).where(
+        F.col("UPDATE_DATE") == F.lit(now)
     )
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    inserted = reader.load().where(F.col("UPDATE_DATE") == F.lit(now))
     rows_inserted = inserted.count()
 
     csv_path = os.path.join(

@@ -6,8 +6,8 @@ and runs per-row lambdas, this declares ONE lazy logical plan:
 
 - the lookup dicts become joins (the hierarchy is dimension-sized →
   broadcast; nothing collects to the driver);
-- last-wins duplicate-key semantics (pd.Series.to_dict) become a
-  row_number window over an explicit order column (SURVEY.md §7.4);
+- last-wins duplicate-key semantics (pd.Series.to_dict) become a row_number
+  window over a file-order column, ``readers.file_position()`` (SURVEY §7.4);
 - every computed column is a native Column expression (codegen), including
   the XML documents and materialized paths;
 - the NOT-NULL filter and varchar truncation are driven from the schema
@@ -45,27 +45,6 @@ from ..schemas import I2B2_COLUMNS, I2B2_NOT_NULL_COLUMNS, I2B2_VARCHAR_LIMITS
 PATH_ROOT = "\\i2b2\\Laboratory"
 
 
-def _with_order(df: DataFrame, order_col: str | None) -> tuple[DataFrame, str]:
-    """Ensure an explicit order column for last-wins semantics.
-
-    Without one, the only available stand-in is ``monotonically_increasing_id``
-    — which encodes (partition, offset), NOT file order, so on multi-partition
-    input the surviving duplicate would silently change run to run. That
-    nondeterminism is refused: the fallback is allowed ONLY for
-    single-partition input (where partition offset IS read order); everything
-    else must supply a real line-number column."""
-    if order_col is not None:
-        return df, order_col
-    if df.rdd.getNumPartitions() > 1:
-        raise ValueError(
-            "hierarchy_order_col is required for multi-partition input: "
-            "monotonically_increasing_id() is not file order across "
-            "partitions, so last-wins survivors would be nondeterministic. "
-            "Supply an explicit line-number/order column."
-        )
-    return df.withColumn("_ord", F.monotonically_increasing_id()), "_ord"
-
-
 def _c_name_concat(compat: bool) -> F.Column:
     """':'-joined 6-column concat (reference :169-170). pandas astype(str)
     turns NaN into 'nan' (compat); spec uses empty string — separators stay
@@ -85,20 +64,20 @@ def transform_loinc_to_i2b2(
     hierarchy: DataFrame,
     mode: str = "spec",
     now: _dt.datetime | None = None,
-    hierarchy_order_col: str | None = None,
+    *,
+    hierarchy_order_col: str,
     import_date: _dt.datetime | None = None,
 ) -> DataFrame:
     """LOINC tables → i2b2 ontology rows (reference transform(), :150-274).
 
-    ``hierarchy_order_col``: column that defines file order for last-wins
-    duplicate resolution. ``import_date``: earliest existing import date from
-    the sink, if any (reference load() read-back, :330-335).
+    ``hierarchy_order_col``: file-order column for last-wins duplicate
+    resolution (``readers.file_position`` on a CSV scan). ``import_date``:
+    earliest existing import date from the sink, if any (reference load()
+    read-back, :330-335).
     """
     if mode not in ("spec", "compat"):
         raise ValueError(f"mode must be spec|compat, got {mode}")
     compat = mode == "compat"
-
-    hierarchy, ord_col = _with_order(hierarchy, hierarchy_order_col)
 
     # One surviving hierarchy row per CODE, last file row wins — replaces
     # loinc_path_dict / loinc_codetext_dict (reference :163,:166). The
@@ -113,10 +92,10 @@ def transform_loinc_to_i2b2(
     # noise next to the fact side at any scale, since the hierarchy is a
     # dimension by definition).
     hier_last = last_wins(
-        hierarchy.select("CODE", "CODE_TEXT", "PATH_TO_ROOT", ord_col),
+        hierarchy.select("CODE", "CODE_TEXT", "PATH_TO_ROOT", hierarchy_order_col),
         ["CODE"],
-        ord_col,
-    ).drop(ord_col)
+        hierarchy_order_col,
+    ).drop(hierarchy_order_col)
 
     # parent_count_dict (:173): children per IMMEDIATE_PARENT.
     parent_counts = hierarchy.groupBy("IMMEDIATE_PARENT").agg(

@@ -1334,65 +1334,66 @@ _CHECK_FIRST: list[str] = [
     # regenerated by tools/rotate_check_first.py — the next 50
     # never-driver-swept names in registration order; pre-verify
     # with tools/driver_repro.py before shipping the round
-    "d14_simhash_recall",
-    "px9_table_maintenance",
-    "io1_elevator_schedule",
-    "nm1_integer_sqrt",
-    "pid1_autoscaler_replay",
-    "kad1_max_subarray",
-    "lz1_lz78_dictionary",
-    "mrk2_inclusion_proof",
-    "topo1_kahn_order",
-    "iban1_mod97_check",
-    "pq1_product_quantization",
-    "zo2_hilbert_locality",
-    "trn1_round_robin",
-    "ulid1_sortable_ids",
-    "mcpi1_monte_carlo_pi",
-    "w13_batch_session_window",
-    "f24_binary_encodings",
-    "vs1_version_ordering",
-    "modpow1_square_multiply",
-    "sieve1_relational_primes",
-    "gcd1_euclid",
-    "cyc1_rho_cycle",
-    "perm2_cycle_decomposition",
-    "collatz1_trajectories",
-    "cr1_ring_election",
-    "trap1_rain_water",
-    "edit1_certified_levenshtein",
-    "hmm1_viterbi",
-    "kmp1_failure_function",
-    "fen1_fenwick_tree",
-    "pas1_binomial_row",
-    "zeck1_zeckendorf",
-    "gray1_reflected_code",
-    "coin1_change_dp_vs_greedy",
-    "lps1_longest_palindrome",
-    "stats4_mergeable_moments",
-    "cv2_rolling_origin",
-    "tk2_mergeable_topk",
-    "w14_ntile_deciles",
-    "decay1_halflife_leaderboard",
-    "lbl1_leakage_free_labels",
-    "bm25_1_ranked_retrieval",
-    "il1_slot_interleave",
-    "apri1_support_lattice",
-    "an4_l_diversity",
-    "ssj2_shingle_prefix_join",
-    "rsv1_weighted_reservoir",
-    "prn1_manifest_pruning",
-    "enc1_encoding_stats",
-    "est1_join_cardinality",
+    "vb2_oov_coverage",
+    "pk2_length_buckets",
+    "topp1_nucleus_cutoff",
+    "spl1_stratified_split",
+    "x8_ivf_recall",
+    "x9_ivf_bucket_balance",
+    "est2_join_order",
+    "pk3_no_straddle_packing",
+    "mix2_epoch_plan",
+    "gc1_orphan_retention",
+    "aug1_token_dropout",
+    "dlq1_dead_letter_repair",
+    "rbo1_rank_biased_overlap",
+    "x10_quantization_error",
+    "ld1_langid_confusion",
+    "krip1_krippendorff_alpha",
+    "enc2_delta_zigzag",
+    "hist3_2d_histogram",
+    "ts5_business_days",
+    "fx1_effective_rates",
+    "wt1_systematic_sample",
+    "sup1_cell_suppression",
+    "seg2_changepoint",
+    "mk2_mann_kendall",
+    "hdr1_log_histogram",
+    "jel1_join_elimination",
+    "d10_minhash_recall",
+    "sc1_sjf_vs_fifo",
+    "lb1_lpt_balance",
+    "salt1_two_phase_agg",
+    "rng1_md5_uniformity",
+    "bt1_bradley_terry",
+    "dsir1_importance_resampling",
+    "fs1_fellegi_sunter",
+    "grp1_group_reward_norm",
+    "chunk1_sliding_chunks",
+    "pad1_padding_waste",
+    "fert1_tokenizer_fertility",
+    "px10_entity_resolution",
+    "prc1_dedup_threshold_curve",
+    "ct2_decontam_spans",
+    "hub1_embedding_hubness",
+    "r1_left_join",
+    "r2_last_wins_dedup",
+    "r3_group_count",
+    "r4_distinct",
+    "r5_project_case",
+    "r6_filter_notnull",
+    "r10_visual_attributes",
+    "r12_path_ops",
 ]
 # Highest CORRECTNESS_r{N}.json acknowledged when the head
 # above was rotated; the round-boundary tripwire
 # (tests/test_evidence_doc.py) tolerates exactly ONE newer
 # round before going red.
-_CHECK_FIRST_ACK_ROUND: int = 10
+_CHECK_FIRST_ACK_ROUND: int = 12
 # Already-swept names deliberately kept in the head for
-# re-certification (--prioritize); not hand-drift.
-_CHECK_FIRST_RECHECK: list[str] = []
+# re-certification (--prioritize, or padding once fewer
+# than 50 never-swept names remain); not hand-drift.
+_CHECK_FIRST_RECHECK: list[str] = ['r10_visual_attributes', 'r12_path_ops', 'r1_left_join', 'r2_last_wins_dedup', 'r3_group_count', 'r4_distinct', 'r5_project_case', 'r6_filter_notnull']
 # end _CHECK_FIRST block (regenerated by rotate_check_first.py)
 
 

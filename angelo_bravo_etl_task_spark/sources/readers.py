@@ -10,24 +10,30 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..schemas import TESTDATA_SCHEMAS
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    header: bool = True,
-    **options: str,
-) -> DataFrame:
-    """CSV scan with an explicit schema (no inference pass)."""
-    reader = spark.read.option("header", str(header).lower()).schema(schema)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.csv(path)
+def read_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """CSV scan with a header line and an explicit schema (no inference pass)."""
+    return spark.read.option("header", "true").schema(schema).csv(path)
+
+
+def file_position() -> Column:
+    """Row order of a CSV scan: (split byte offset, row offset in partition).
+
+    Not a bare ``monotonically_increasing_id()``: its partition index need
+    not follow file offset (``FilePartition.getFilePartitions`` orders splits
+    by size). Evaluate it directly on the scan, before any exchange or union,
+    and on ONE input file (``stage_loinc_inputs`` stages one hierarchy CSV).
+    """
+    return F.struct(
+        F.input_file_block_start(),
+        F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1),
+    )
 
 
 def read_parquet(
@@ -65,8 +71,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events" and parquet_ts_unit(path) == "ns":
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, StructField, StructType
+        from pyspark.sql.types import LongType, StructField
 
         schema = StructType(
             [

@@ -3,19 +3,26 @@
 The reference's load() (Angelo_ETL_Task.py:276-374) is psycopg2 row-batched
 INSERTs plus a COPY-to-CSV export. Spark equivalents:
 
-- ``write_jdbc``: per-partition parallel batched inserts
-  (``batchsize``), DDL types via ``createTableColumnTypes`` — replaces
-  CREATE TABLE (:298-325) + execute_batch (:350);
-- ``read_jdbc_min``: the IMPORT_DATE read-back (:331-335) as a pushed-down
-  aggregate;
+- ``execute_jdbc_ddl``: the exact CREATE TABLE (:298-325) as one
+  driver-side statement;
+- ``write_jdbc``: per-partition parallel batched inserts (``batchsize``) —
+  replaces execute_batch (:350);
+- ``read_jdbc``: the one JDBC table read, behind ``jdbc_table_exists`` (the
+  :294-297 probe), ``read_jdbc_min`` (the IMPORT_DATE read-back, :331-335,
+  as a pushed-down aggregate) and the runner's verify re-read;
 - ``write_csv``: the golden-output export (:357-363); single_file=True
   coalesces to one file like COPY TO.
 """
 
 from __future__ import annotations
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+#: SQLStates of "table does not exist": Derby, PostgreSQL
+_TABLE_NOT_FOUND_STATES = frozenset({"42X05", "42P01"})
 
 
 def write_parquet(
@@ -93,20 +100,36 @@ def execute_jdbc_ddl(
         conn.close()
 
 
+def read_jdbc(
+    spark: SparkSession, url: str, table: str, **properties: str
+) -> DataFrame:
+    """A JDBC table as a DataFrame; ``properties`` become reader options."""
+    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
+    for k, v in properties.items():
+        reader = reader.option(k, v)
+    return reader.load()
+
+
 def jdbc_table_exists(
     spark: SparkSession, url: str, table: str, **properties: str
 ) -> bool:
     """Table-existence probe (reference :294-297, information_schema query):
-    resolve the table's schema through the JDBC dialect; a missing table
-    raises from the database."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    for k, v in properties.items():
-        reader = reader.option(k, v)
+    resolve the table's schema through the JDBC dialect. Only the database's
+    "table not found" reads as absent; any other failure (no database, bad
+    credentials, driver missing) is raised."""
     try:
-        reader.load().schema
+        read_jdbc(spark, url, table, **properties)
         return True
-    except Exception:
-        return False
+    except Py4JJavaError as e:
+        gateway, t = spark.sparkContext._gateway, e.java_exception
+        while t is not None:  # the cause chain, down to the driver's error
+            if (
+                is_instance_of(gateway, t, "java.sql.SQLException")
+                and t.getSQLState() in _TABLE_NOT_FOUND_STATES
+            ):
+                return False
+            t = t.getCause()
+        raise
 
 
 def read_jdbc_min(
@@ -115,13 +138,5 @@ def read_jdbc_min(
     """MIN(column) from a JDBC table (reference :331-335). Spark 3.3+ pushes
     the aggregate down to the database (pushDownAggregate), so only one row
     crosses the wire."""
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("pushDownAggregate", "true")
-    )
-    for k, v in properties.items():
-        reader = reader.option(k, v)
-    row = reader.load().agg(F.min(column).alias("m")).collect()[0]
-    return row["m"]
+    df = read_jdbc(spark, url, table, pushDownAggregate="true", **properties)
+    return df.agg(F.min(column).alias("m")).collect()[0]["m"]

@@ -47,9 +47,10 @@ def _zip_bytes(member: str, payload: bytes) -> bytes:
     return buf.getvalue()
 
 
-def _fake_fetcher() -> staging.Fetcher:
+def _fake_fetcher(extra_hier_rows: list[tuple] = ()) -> staging.Fetcher:
     """Offline stand-in for the authenticated LOINC download (:135-141):
-    serves the golden-fixture tables as in-memory zips keyed by URL."""
+    serves the golden-fixture tables as in-memory zips keyed by URL;
+    ``extra_hier_rows`` are appended to the hierarchy file."""
     loinc = _csv_bytes(
         [
             "LOINC_NUM", "COMPONENT", "PROPERTY", "TIME_ASPCT",
@@ -79,7 +80,7 @@ def _fake_fetcher() -> staging.Fetcher:
     hier_rows.append((CHAIN, 1, "LP100945-7", "4548-4", "Hgb A1c MFr Bld"))
     hierarchy = _csv_bytes(
         ["PATH_TO_ROOT", "SEQUENCE", "IMMEDIATE_PARENT", "CODE", "CODE_TEXT"],
-        hier_rows,
+        hier_rows + list(extra_hier_rows),
     )
     payloads = {
         staging.LOINC_TABLE_URL: _zip_bytes("Loinc.csv", loinc),
@@ -157,6 +158,45 @@ def test_run_etl_reference_control_flow(spark, derby_url, tmp_path):
     assert back.count() == 6
     run2 = back.where(back["UPDATE_DATE"] == now2).select("IMPORT_DATE").distinct()
     assert [r[0] for r in run2.collect()] == [now1]
+
+
+def test_run_etl_last_wins_on_multi_split_hierarchy(spark, tmp_path):
+    """A hierarchy CSV read as several splits whose duplicate of 4548-4 is
+    its LAST row: run_etl keeps that row (pd.Series.to_dict last-wins,
+    reference :163-176) instead of refusing multi-partition input."""
+    from angelo_bravo_etl_task_spark.schemas import HIERARCHY_SCHEMA
+    from angelo_bravo_etl_task_spark.sources.readers import read_csv
+
+    filler = [
+        ("LP31756-7", 1, "LP31756-7", f"{i}-9", f"filler {i}") for i in range(2000)
+    ]
+    last = (CHAIN, 2, "LP100945-7", "4548-4", "Hgb A1c last row")
+    url = "jdbc:derby:memory:etl_multi_split;create=true"
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "8192")
+    try:
+        summary = run_etl(
+            spark,
+            _fake_fetcher(filler + [last]),
+            str(tmp_path / "staging"),
+            url,
+            str(tmp_path / "out"),
+            now=datetime.datetime(2026, 4, 1, 12, 0, 0),
+            text_type="CLOB",
+            nullable_string_type="CLOB",
+            jdbc_options={"driver": DRIVER},
+        )
+        staged = str(tmp_path / "staging" / "MultiAxialHierarchy.csv")
+        assert read_csv(spark, staged, HIERARCHY_SCHEMA).rdd.getNumPartitions() > 1
+    finally:
+        spark.conf.set(key, saved)
+    assert summary["rows_inserted"] == 3
+    # the export holds exactly the rows the sink accepted
+    [part] = glob.glob(summary["csv_path"] + "/part-*.csv")
+    with open(part, newline="") as f:
+        symbols = {r["C_BASECODE"]: r["C_SYMBOL"] for r in csv.DictReader(f)}
+    assert symbols["LOINC:4548-4"] == "Hgb A1c last row"
 
 
 def test_cli_arg_parser_mirrors_reference_main():

@@ -142,6 +142,18 @@ def test_rotation_pad_branch_near_drained():
     assert len(set(head)) == rot.WINDOW
 
 
+def test_rotation_pad_declared_as_recheck():
+    """Near-drained: the swept names that pad the head are declared as
+    re-checks, so a freshly written head is not stale (only --prioritize
+    names used to be declared, leaving the pad to read as hand-drift)."""
+    reg = _registry(120)
+    swept = set(reg[:110])
+    head = rot.next_head(["q005"], swept=swept, registry=reg)
+    recheck = rot.recheck_names(head, swept)
+    assert recheck == reg[:40]  # q005 plus the 39 oldest others
+    assert rot.staleness_verdict(head, swept, recheck, 12, 12) == ("ok", [])
+
+
 def test_rotation_pad_branch_fully_drained():
     reg = _registry(80)
     head = rot.next_head([], swept=set(reg), registry=reg)

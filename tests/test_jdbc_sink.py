@@ -9,6 +9,7 @@ from __future__ import annotations
 import datetime
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from angelo_bravo_etl_task_spark.sources import writers as W
@@ -75,3 +76,12 @@ def test_jdbc_roundtrip_embedded_derby(spark, derby_url):
     # append mode adds rows instead of replacing
     W.write_jdbc(df.limit(10), derby_url, table, mode="append", driver=DRIVER)
     assert back.count() == 110
+
+
+def test_table_probe_raises_when_database_unreachable(spark):
+    """Only "table not found" reads as absent: a database that cannot be
+    opened (Derby XJ004, no ;create=true) must surface, not send the run
+    down the CREATE TABLE branch."""
+    url = "jdbc:derby:memory:absent_db"
+    with pytest.raises(Py4JJavaError, match="absent_db"):
+        W.jdbc_table_exists(spark, url, "I2B2", driver=DRIVER)

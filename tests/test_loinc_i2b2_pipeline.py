@@ -9,12 +9,16 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from angelo_bravo_etl_task_spark.pipelines.loinc_i2b2 import transform_loinc_to_i2b2
+from angelo_bravo_etl_task_spark.pipelines.loinc_i2b2 import (
+    PATH_ROOT,
+    transform_loinc_to_i2b2,
+)
 from angelo_bravo_etl_task_spark.schemas import (
     HIERARCHY_SCHEMA,
     I2B2_SCHEMA,
     LOINC_SCHEMA,
 )
+from angelo_bravo_etl_task_spark.sources.readers import file_position, read_csv
 
 CHAIN = "LP31756-7.LP30786-5.LP31617-1.LP14554-7.LP16412-6.LP16413-4.LP100945-7"
 ANCESTOR_NAMES = {
@@ -242,14 +246,58 @@ def test_compat_mode_nan_in_xml(spark):
     assert "nan" not in spec["C_METADATAXML"]
 
 
-def test_order_fallback_refused_on_multipartition_input(spark):
-    """_with_order's monotonically_increasing_id fallback is not file order
-    across partitions — the pipeline must refuse it rather than silently
-    produce run-dependent survivors."""
-    loinc, hierarchy = _fixtures(spark)
-    multi = hierarchy.drop("_line_no").repartition(4)
-    with pytest.raises(ValueError, match="hierarchy_order_col is required"):
-        transform_loinc_to_i2b2(loinc, multi, mode="spec")
-    # single-partition input still allows the fallback
-    single = hierarchy.drop("_line_no").coalesce(1)
-    assert transform_loinc_to_i2b2(loinc, single, mode="spec").count() > 0
+def test_last_wins_follows_file_order_across_splits(spark, tmp_path):
+    """A hierarchy CSV read as many splits, with each duplicated CODE's rows
+    in different splits: the survivors keyed by ``file_position()`` are the
+    last rows in file order, as pd.Series.to_dict() keeps them (reference
+    :163-176)."""
+    import random
+
+    import pandas as pd
+
+    rng = random.Random(7)
+    parents = [f"LP{k}-0" for k in range(20)]
+    rows = [("", 1, None, p, f"parent {p}") for p in parents]
+    placements = []
+    for i in range(400):
+        for rep in range(rng.choice((1, 2, 3))):
+            chain = ".".join(rng.sample(parents, rng.randint(1, 3)))
+            parent = chain.rsplit(".", 1)[-1]
+            placements.append((chain, rep + 1, parent, f"{i}-1", f"text {i} v{rep}"))
+    rng.shuffle(placements)
+    rows += placements
+    path = tmp_path / "MultiAxialHierarchy.csv"
+    pd.DataFrame(rows, columns=HIERARCHY_SCHEMA.names).to_csv(path, index=False)
+
+    # the reference's dict builds: the last row per CODE wins
+    ref = pd.read_csv(path, dtype=str, keep_default_na=False)
+    text = pd.Series(ref["CODE_TEXT"].values, index=ref["CODE"]).to_dict()
+    to_root = pd.Series(ref["PATH_TO_ROOT"].values, index=ref["CODE"]).to_dict()
+    assert len(text) < len(ref)  # duplicates present
+
+    codes = sorted({r[3] for r in placements})
+    loinc = spark.createDataFrame(
+        [(c, "Comp", "P", "T", "S", "Qn", None, "ACTIVE") for c in codes],
+        LOINC_SCHEMA,
+    )
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        hierarchy = read_csv(spark, str(path), HIERARCHY_SCHEMA).withColumn(
+            "_file_pos", file_position()
+        )
+        assert hierarchy.rdd.getNumPartitions() > 1
+        out = transform_loinc_to_i2b2(
+            loinc, hierarchy, mode="spec", hierarchy_order_col="_file_pos"
+        ).collect()
+    finally:
+        spark.conf.set(key, saved)
+
+    assert len(out) == len(codes)
+    for r in out:
+        code = r["C_BASECODE"].removeprefix("LOINC:")
+        assert r["C_SYMBOL"] == text[code]
+        assert r["C_FULLNAME"] == PATH_ROOT + "".join(
+            f"\\({c}) {text[c]}" for c in to_root[code].split(".") + [code]
+        )

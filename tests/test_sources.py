@@ -10,7 +10,11 @@ import zipfile
 from pyspark.sql import functions as F
 
 from angelo_bravo_etl_task_spark.schemas import HIERARCHY_SCHEMA, LOINC_SCHEMA
-from angelo_bravo_etl_task_spark.sources.readers import read_csv, read_parquet
+from angelo_bravo_etl_task_spark.sources.readers import (
+    file_position,
+    read_csv,
+    read_parquet,
+)
 from angelo_bravo_etl_task_spark.sources.staging import (
     LOINC_HIERARCHY_URL,
     LOINC_TABLE_URL,
@@ -68,10 +72,10 @@ def test_csv_read_with_schema_then_pipeline(spark, tmp_path):
 
     loinc = read_csv(spark, str(loinc_path), LOINC_SCHEMA)
     hierarchy = read_csv(spark, str(hier_path), HIERARCHY_SCHEMA).withColumn(
-        "_line_no", F.monotonically_increasing_id()
+        "_file_pos", file_position()
     )
     out = transform_loinc_to_i2b2(
-        loinc, hierarchy, mode="spec", hierarchy_order_col="_line_no"
+        loinc, hierarchy, mode="spec", hierarchy_order_col="_file_pos"
     )
     rows = {r["C_BASECODE"]: r for r in out.collect()}
     assert rows["LOINC:4548-4"]["C_HLEVEL"] == 3

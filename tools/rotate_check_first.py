@@ -12,6 +12,9 @@ Selection rule: the first 50 names, in registration order, that appear in
 NO CORRECTNESS_r*.json. Names listed in --prioritize (comma-separated)
 LEAD the head — they are kept even if already swept (a verdict-priority
 re-check of a red row must be forceable; a warning lists any such names).
+When fewer than 50 never-swept names remain, the head is padded with the
+oldest swept ones. Every swept name the head holds, prioritized or padding,
+is written to _CHECK_FIRST_RECHECK.
 
 After rewriting, ALWAYS pre-verify the new head locally:
 
@@ -128,6 +131,12 @@ def next_head(
     return head
 
 
+def recheck_names(head: list[str], swept: set[str]) -> list[str]:
+    """The already-swept names in ``head`` — prioritized re-checks and the
+    pad — which the head declares so they do not read as hand-drift."""
+    return sorted(set(head) & swept)
+
+
 SENTINEL = "# end _CHECK_FIRST block (regenerated by rotate_check_first.py)"
 
 
@@ -154,7 +163,8 @@ def rewrite(head: list[str], recheck: list[str]) -> None:
     lines.append("# round before going red.")
     lines.append(f"_CHECK_FIRST_ACK_ROUND: int = {latest_round()}")
     lines.append("# Already-swept names deliberately kept in the head for")
-    lines.append("# re-certification (--prioritize); not hand-drift.")
+    lines.append("# re-certification (--prioritize, or padding once fewer")
+    lines.append("# than 50 never-swept names remain); not hand-drift.")
     lines.append(f"_CHECK_FIRST_RECHECK: list[str] = {recheck!r}")
     lines.append(SENTINEL)
     open(path, "w").write(src[:start] + "\n".join(lines) + src[end:])
@@ -168,8 +178,7 @@ def main() -> None:
     pri = [n for n in args.prioritize.split(",") if n]
     head = next_head(pri)
     if args.write:
-        recheck = sorted(set(pri) & load_swept())
-        rewrite(head, recheck)
+        rewrite(head, recheck_names(head, load_swept()))
         print(f"# wrote {len(head)} names to queries.py::_CHECK_FIRST",
               file=sys.stderr)
     print(" ".join(head))
