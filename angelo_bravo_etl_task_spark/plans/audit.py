@@ -11,7 +11,7 @@ surfacing as a 100×-slower cluster job.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def physical_plan(df: DataFrame) -> str:
@@ -19,10 +19,12 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def explain_formatted(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "formatted"
-    )
+def compiled_classes(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far (Janino compiles; a
+    hit in the generated-code cache compiles nothing). The delta over a
+    query shows whether its codegen was reused."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # type: ignore[attr-defined]
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def assert_plan(

@@ -41,6 +41,21 @@ _SRC9_STEP = 120
 _RUN_SEQ = [0]
 
 
+def _rows_seen(rows_by_batch: dict[int, int], progress) -> int:
+    """Record each progress event's ``numInputRows`` under its batchId in
+    ``rows_by_batch`` (kept across polls) and return the running total.
+
+    ``recentProgress`` is a ring buffer of the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` (default 100)
+    batches, so summing it alone undercounts once a stream has run past
+    that many batches; keying by batchId also counts a batch seen on two
+    polls once."""
+    for p in progress or []:
+        if p:
+            rows_by_batch[int(p["batchId"])] = int(p["numInputRows"])
+    return sum(rows_by_batch.values())
+
+
 def _register_stream_source(spark: SparkSession) -> None:
     from .sources.pydatasource import RangeSensorStreamDataSource
 
@@ -76,6 +91,7 @@ def _run_stream_to_memory(
             .start()
         )
         try:
+            rows_by_batch: dict[int, int] = {}
             deadline = time.time() + timeout
             while time.time() < deadline:
                 # Optimization r12 (guide §5 "the driver should do almost
@@ -87,12 +103,7 @@ def _run_stream_to_memory(
                 # progress event is published, so the break condition is
                 # unchanged. The final count() assertion below still
                 # verifies the sink itself.
-                done = sum(
-                    int(p["numInputRows"])
-                    for p in (q.recentProgress or [])
-                    if p
-                )
-                if done >= _SRC9_N_ROWS:
+                if _rows_seen(rows_by_batch, q.recentProgress) >= _SRC9_N_ROWS:
                     break
                 time.sleep(0.05)
         finally:

@@ -52,6 +52,17 @@ _ENGINE_CONFS: dict[str, str] = {
     # function surface (unix_micros, window, watermarks) applies uniformly;
     # with the UTC session zone the instants equal DuckDB's naive values.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Generated-code cache (Janino classes keyed by their source): Spark's
+    # default of 100 entries is below one warm pass's working set (~250
+    # classes per perfbench sql_mix pass, px1 alone ~90; ~255 per llm_mix
+    # pass), so the LRU evicted every class before its query came round
+    # again and each op paid compile, class load and interpreted warm-up
+    # anew. 1000 covers both mixes (~500 classes) twice over. Measured on
+    # 4 vCPU: classes compiled per warm pass fell from 204-254 to 0-52
+    # (sql_mix) and 167-211 to 4-20 (llm_mix); query_cpu_s fell 20%
+    # (sql_mix) and 22% (llm_mix). Static: only effective at JVM launch,
+    # like the heap size set in get_spark.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

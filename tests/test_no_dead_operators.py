@@ -1,9 +1,11 @@
-"""Every top-level function in ``operators/*.py`` must have a caller.
+"""Every top-level function in the package must have a caller.
 
-The operator library keeps no dead helpers: a function whose name occurs
-as code (a NAME token, not a docstring or comment mention) nowhere in the
-package or in ``tests/`` apart from its own ``def`` line is dead, and this
-test names it. Delete it, or add the caller that needs it."""
+The package keeps no dead helpers: a top-level function, in any module
+except the ``queries*.py`` registries (their query functions are called by
+name through ``QUERIES``), whose name occurs as code (a NAME token, not a
+docstring or comment mention) nowhere in the package or in ``tests/``
+apart from its own ``def`` line is dead, and this test names it. Delete
+it, or add the caller that needs it."""
 
 from __future__ import annotations
 
@@ -30,10 +32,11 @@ def _name_counts() -> collections.Counter:
 def test_every_operator_function_has_a_caller():
     counts = _name_counts()
     dead = [
-        f"{path.name}:{node.lineno} {node.name}"
-        for path in sorted((PKG / "operators").glob("*.py"))
+        f"{path.relative_to(PKG)}:{node.lineno} {node.name}"
+        for path in sorted(PKG.rglob("*.py"))
+        if not path.name.startswith("queries")
         for node in ast.parse(path.read_text(encoding="utf-8")).body
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
         and counts[node.name] <= 1
     ]
-    assert dead == [], "operator functions with no caller: " + ", ".join(dead)
+    assert dead == [], "package functions with no caller: " + ", ".join(dead)

@@ -11,7 +11,11 @@ itself to certify offset progression and readBetweenOffsets replay.
 from __future__ import annotations
 
 from angelo_bravo_etl_task_spark.queries import QUERIES
-from angelo_bravo_etl_task_spark.queries_wave76 import _SRC9_N_ROWS, _SRC9_STEP
+from angelo_bravo_etl_task_spark.queries_wave76 import (
+    _SRC9_N_ROWS,
+    _SRC9_STEP,
+    _rows_seen,
+)
 
 _ROWS = [(i, i % 7, (i * i) % 1000) for i in range(_SRC9_N_ROWS)]
 
@@ -101,3 +105,18 @@ def test_stream_reader_offsets_and_replay():
     # an empty read past the end stays empty and parked
     it, off3 = r.read(off)
     assert list(it) == [] and off3 == off
+
+
+def test_drain_count_survives_progress_ring_buffer():
+    """recentProgress keeps only the last 100 batches: a first poll sees
+    batches 0-99, a later one 50-149. Summing one poll undercounts the
+    150 batches; the helper's batchId ledger reaches the total."""
+    def poll(batch_ids):
+        return [{"batchId": b, "numInputRows": 2} for b in batch_ids]
+
+    first, second = poll(range(0, 100)), poll(range(50, 150))
+    total = 2 * 150
+    assert sum(p["numInputRows"] for p in second) < total
+    rows_by_batch: dict[int, int] = {}
+    assert _rows_seen(rows_by_batch, first) == 200
+    assert _rows_seen(rows_by_batch, [None, *second]) == total

@@ -23,6 +23,11 @@ the harness default partitioning AND under a cluster-shaped
 ``spark.sql.shuffle.partitions`` is a runtime SQL conf, so the checks run
 inside the shared session (set + restore); no second JVM is needed —
 which is exactly why this knob is safe to retune per-deployment.
+
+The generated-code cache (``spark.sql.codegen.cache.maxEntries``, a
+static conf sized by ``session.get_spark``) is checked the same way: a
+query re-run after enough other queries to overflow Spark's 100-entry
+default must reuse its compiled classes, not recompile them.
 """
 
 from __future__ import annotations
@@ -33,7 +38,7 @@ from contextlib import contextmanager
 import pandas as pd
 import pytest
 
-from angelo_bravo_etl_task_spark.plans.audit import physical_plan
+from angelo_bravo_etl_task_spark.plans.audit import compiled_classes, physical_plan
 from angelo_bravo_etl_task_spark.queries import QUERIES
 
 PIPELINES = [
@@ -44,6 +49,10 @@ PIPELINES = [
 ]
 
 CLUSTER_SHUFFLE_PARTITIONS = 256
+
+#: compile well over 100 generated classes between them, so Spark's
+#: default 100-entry codegen cache evicts whatever ran before them
+CODEGEN_FILLERS = ["px1_loinc_i2b2_pipeline", "w14_ntile_deciles"]
 
 
 def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -66,10 +75,9 @@ def _strategy_counts(plan: str) -> dict[str, int]:
 
 
 @contextmanager
-def _shuffle_partitions(spark, n: int):
-    key = "spark.sql.shuffle.partitions"
+def _runtime_conf(spark, key: str, value: str):
     prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    spark.conf.set(key, value)
     try:
         yield
     finally:
@@ -86,7 +94,9 @@ def test_pipeline_invariant_under_cluster_shuffle_partitions(
     base_plan = physical_plan(base_df)
     base = _canon(base_df.toPandas())
 
-    with _shuffle_partitions(spark, CLUSTER_SHUFFLE_PARTITIONS):
+    with _runtime_conf(
+        spark, "spark.sql.shuffle.partitions", str(CLUSTER_SHUFFLE_PARTITIONS)
+    ):
         scaled_df = fn(spark, sf_dir)
         scaled_plan = physical_plan(scaled_df)
         scaled = _canon(scaled_df.toPandas())
@@ -114,4 +124,26 @@ def test_pipeline_invariant_under_cluster_shuffle_partitions(
     assert b_counts == s_counts, (
         f"{name}: join strategies changed with shuffle partitions: "
         f"default={b_counts} cluster={s_counts}"
+    )
+
+
+def _run(spark, sf_dir, name: str) -> int:
+    """Run a registered query into the noop sink; returns the number of
+    generated classes compiled meanwhile."""
+    before = compiled_classes(spark)
+    QUERIES[name][0](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return compiled_classes(spark) - before
+
+
+def test_codegen_cache_holds_the_working_set(spark, sf_dir):
+    # AQE numbers codegen stages in completion order, so the generated
+    # source (the cache key) can differ between runs of one plan; without
+    # AQE a re-run generates identical source and must hit the cache.
+    with _runtime_conf(spark, "spark.sql.adaptive.enabled", "false"):
+        _run(spark, sf_dir, "g2_cube")
+        fillers = {name: _run(spark, sf_dir, name) for name in CODEGEN_FILLERS}
+        recompiled = _run(spark, sf_dir, "g2_cube")
+    assert recompiled == 0, (
+        f"g2_cube recompiled {recompiled} classes after {fillers}: the "
+        "codegen cache is smaller than the working set"
     )

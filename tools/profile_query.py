@@ -3,6 +3,9 @@
 Runs each named query in THIS process (bench confs: AQE off, 8 shuffle
 partitions), after a sf0.001 warmup, and prints:
   - wall-clock for construction vs execution (.count(), the bench action)
+  - the number of generated classes Janino compiled during the run (0
+    when every class came from the generated-code cache; a query that
+    recompiles on every call shows its cache thrash here)
   - the Spark REST /stages breakdown: per-stage executorRunTime,
     shuffle read/write bytes, task count — the guide section 1/7 loop
     without a browser.
@@ -23,6 +26,7 @@ import urllib.request
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from angelo_bravo_etl_task_spark.plans.audit import compiled_classes  # noqa: E402
 from angelo_bravo_etl_task_spark.queries import QUERIES  # noqa: E402
 from angelo_bravo_etl_task_spark.session import get_spark  # noqa: E402
 
@@ -53,14 +57,16 @@ def main() -> None:
                 print(f"warmup failed {name}: {exc}")
         before_ids = {s["stageId"] for s in stages()}
         spark.sparkContext.setJobDescription(f"profile:{name}")
+        compiled0 = compiled_classes(spark)
         t0 = time.perf_counter()
         df = fn(spark, args.sf)
         t1 = time.perf_counter()
         n = df.count()
         t2 = time.perf_counter()
+        compiled = compiled_classes(spark) - compiled0
         spark.sparkContext.setJobDescription(None)
         print(f"\n== {name}: construct {t1 - t0:.3f}s, execute "
-              f"{t2 - t1:.3f}s, rows={n}")
+              f"{t2 - t1:.3f}s, rows={n}, compiled {compiled} classes")
         new = [s for s in stages() if s["stageId"] not in before_ids]
         new.sort(key=lambda s: -s.get("executorRunTime", 0))
         tot_run = sum(s.get("executorRunTime", 0) for s in new)
