@@ -18,7 +18,7 @@ from __future__ import annotations
 from typing import Sequence
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .partitioning import spread as _spread
@@ -30,20 +30,26 @@ def last_wins(
     """Keep, per key, the row with the greatest ``order_col`` (last-wins).
 
     Spark-native equivalent of ``pd.Series(values, index=keys).to_dict()``
-    duplicate-key semantics (Angelo_ETL_Task.py:163,166,169,176): one shuffle
-    on the key, no global sort. Use `first_wins` semantics by passing a
-    negated/inverted order column.
+    duplicate-key semantics (Angelo_ETL_Task.py:163,166,169,176): one
+    aggregate, ``max_by(struct(non-key columns), struct(order columns))``,
+    so one shuffle on the key and no sort. Use `first_wins` semantics by
+    passing a negated/inverted order column.
 
-    ``order_col`` may be a list of columns (compared left-to-right, all
-    descending). The combined ordering must be UNIQUE within each key group
-    or the survivor is engine/run-dependent — pass enough tiebreakers.
+    ``order_col`` may be a list of columns, compared left to right. A NULL
+    order value ranks below every non-NULL one (as ``row_number`` over
+    ``DESC`` would rank it last); a key whose only row has a NULL order
+    still keeps that row, because the order struct itself is never NULL.
+    The combined ordering must be UNIQUE within each key group or the
+    survivor is engine/run-dependent — pass enough tiebreakers. Output
+    columns keep the input's names, order and types.
     """
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_cols])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
+    values = [c for c in df.columns if c not in keys]
+    kept = df.groupBy(*keys).agg(
+        F.max_by(F.struct(*values), F.struct(*order_cols)).alias("_last")
+    )
+    return kept.select(
+        *[c if c in keys else F.col("_last")[c].alias(c) for c in df.columns]
     )
 
 

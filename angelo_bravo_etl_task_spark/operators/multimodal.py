@@ -19,7 +19,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -76,16 +75,6 @@ def _decode_image_bytes(data: bytes, fake: bool) -> tuple[int, int, int]:
             )
     digest = hashlib.sha256(data or b"").digest()
     return 64 + digest[0] % 192, 64 + digest[1] % 192, 3
-
-
-def attach_binary_metadata(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Cheap JVM-side metadata (no decode): byte length + crc."""
-    return df.withColumns(
-        {
-            "content_length": F.octet_length(F.col(content_col)).cast("long"),
-            "content_crc32": F.crc32(F.col(content_col)),
-        }
-    )
 
 
 def extract_image_features(df: DataFrame, fake: bool = True) -> DataFrame:

@@ -34,11 +34,6 @@ def rate_to_threshold(rate: float, width: int = 4) -> str:
     return format(min(int(rate * space), space), "0{}x".format(width))
 
 
-def hash_sample(df: DataFrame, key: Column | str, rate: float) -> DataFrame:
-    """Keep a deterministic ~``rate`` fraction keyed by ``key``."""
-    return df.where(hash_bucket(key) < rate_to_threshold(rate))
-
-
 def stratified_hash_sample(
     df: DataFrame, key: Column | str, strata_col: str, rates: dict[str, float]
 ) -> DataFrame:

@@ -6,8 +6,9 @@ and runs per-row lambdas, this declares ONE lazy logical plan:
 
 - the lookup dicts become joins (the hierarchy is dimension-sized →
   broadcast; nothing collects to the driver);
-- last-wins duplicate-key semantics (pd.Series.to_dict) become a row_number
-  window over a file-order column, ``readers.file_position()`` (SURVEY §7.4);
+- last-wins duplicate-key semantics (pd.Series.to_dict) become one
+  aggregate, ``max_by`` over a file-order column,
+  ``readers.file_position()`` (SURVEY §7.4);
 - every computed column is a native Column expression (codegen), including
   the XML documents and materialized paths;
 - the NOT-NULL filter and varchar truncation are driven from the schema
@@ -17,9 +18,14 @@ Two modes (SURVEY.md §7.4): ``spec`` (docx-correct, default) and ``compat``
 (reproduces the reference's verified quirks: leaf-name repetition in
 C_FULLNAME segments (:40) and 'nan' literals in C_NAME (:169-170)).
 
-At 100 TB-shape inputs: the only shuffles are (a) the last-wins window on
-CODE, (b) the path-segment regroup for spec-mode names; hierarchy-side
-joins broadcast. Both shuffles key on high-cardinality codes — no skew.
+Both modes build C_FULLNAME with one expression over the path's codes and
+names; only the names differ (spec: each ancestor's own name, resolved once
+per distinct PATH_TO_ROOT; compat: the leaf's name repeated).
+
+At 100 TB-shape inputs every shuffle is on the hierarchy side (last-wins on
+CODE, children per parent, names per distinct path), and each result is
+broadcast onto the LOINC rows. The only fact-side work is projection: the
+LOINC rows are probed against broadcast maps, never shuffled.
 """
 
 from __future__ import annotations
@@ -83,14 +89,6 @@ def transform_loinc_to_i2b2(
     # loinc_path_dict / loinc_codetext_dict (reference :163,:166). The
     # reference keys the path dict by merged LOINC_NUM, which equals CODE on
     # the join matches, so a single dedup serves both.
-    # hier_last feeds up to three places (the base join, and in spec mode
-    # the per-segment name map); Catalyst's tree-shaped plan re-derives
-    # the window subtree per use. That re-derivation is two extra
-    # dimension-sized window shuffles — measurably cheaper than an eager
-    # localCheckpoint here (A/B at sf0.1: materialization costs ~1 s cold
-    # and breaks the transform's one-lazy-plan property; the recompute is
-    # noise next to the fact side at any scale, since the hierarchy is a
-    # dimension by definition).
     hier_last = last_wins(
         hierarchy.select("CODE", "CODE_TEXT", "PATH_TO_ROOT", hierarchy_order_col),
         ["CODE"],
@@ -125,51 +123,39 @@ def transform_loinc_to_i2b2(
     if compat:
         # reference bug (:40): every segment carries the LEAF's name
         names_arr = F.transform(codes_arr, lambda _: F.col("CODE_TEXT"))
-        base = base.withColumn(
-            "C_FULLNAME", materialized_path(codes_arr, names_arr, PATH_ROOT)
-        )
     else:
-        # spec mode: per-segment names — explode the path, join the (broadcast)
-        # code→name map, regroup ordered by position. One shuffle on LOINC_NUM.
+        # spec mode: each ancestor's own name, resolved once per distinct
+        # PATH_TO_ROOT (a hierarchy-sized frame, broadcast back onto base).
+        # Ancestors missing from the hierarchy would KeyError in the
+        # reference; spec falls back to the code itself, for the leaf too.
         names = hier_last.select(
             F.col("CODE").alias("_seg_code"), F.col("CODE_TEXT").alias("_seg_name")
         )
-        segs = (
-            base.select("LOINC_NUM", F.posexplode(codes_arr).alias("_pos", "_seg_code"))
-            .join(F.broadcast(names), "_seg_code", "left")
-            .groupBy("LOINC_NUM")
-            .agg(
-                F.concat_ws(
-                    "",
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(
-                                    F.col("_pos"),
-                                    F.concat(
-                                        F.lit("\\("),
-                                        F.col("_seg_code"),
-                                        F.lit(") "),
-                                        # ancestors missing from the hierarchy
-                                        # would KeyError in the reference; spec
-                                        # falls back to the code itself
-                                        F.coalesce(F.col("_seg_name"), F.col("_seg_code")),
-                                    ).alias("_seg"),
-                                )
-                            )
-                        ),
-                        lambda s: s["_seg"],
-                    ),
-                ).alias("_segments")
-            )
+        path_names = (
+            hier_last.select("PATH_TO_ROOT")
+            .distinct()
             .select(
-                F.col("LOINC_NUM").alias("_fn_code"),
-                F.concat(F.lit(PATH_ROOT), F.col("_segments")).alias("C_FULLNAME"),
+                "PATH_TO_ROOT",
+                F.posexplode(F.split("PATH_TO_ROOT", r"\.")).alias("_pos", "_seg_code"),
             )
+            .join(F.broadcast(names), "_seg_code", "left")
+            .groupBy("PATH_TO_ROOT")
+            .agg(
+                F.array_sort(
+                    F.collect_list(
+                        F.struct("_pos", F.coalesce("_seg_name", "_seg_code").alias("n"))
+                    )
+                ).alias("_segs")
+            )
+            .select("PATH_TO_ROOT", F.col("_segs.n").alias("_path_names"))
         )
-        base = base.join(segs, base["LOINC_NUM"] == segs["_fn_code"], "inner").drop(
-            "_fn_code"
+        base = base.join(F.broadcast(path_names), "PATH_TO_ROOT")
+        names_arr = F.concat(
+            F.col("_path_names"), F.array(F.coalesce("CODE_TEXT", "LOINC_NUM"))
         )
+    base = base.withColumn(
+        "C_FULLNAME", materialized_path(codes_arr, names_arr, PATH_ROOT)
+    )
 
     # --- remaining columns (reference :189-241), all native expressions --
     now_lit = run_timestamp_lit(now)

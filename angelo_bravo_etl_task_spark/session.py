@@ -78,7 +78,6 @@ def get_spark(
     app_name: str = "angelo-bravo-etl-task-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_confs: dict[str, str] | None = None,
     adaptive: bool | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -116,14 +115,11 @@ def get_spark(
     # Python workers import the package whatever directory the client runs
     # in: the worker daemon is one of its modules, and UDFs such as mm2's
     # decoder pickle package functions by reference. Spark merges its own
-    # archives and the client's PYTHONPATH around this entry; extra_confs
-    # can still override it.
+    # archives and the client's PYTHONPATH around this entry.
     package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     confs["spark.executorEnv.PYTHONPATH"] = package_parent
     if adaptive is not None:
         confs["spark.sql.adaptive.enabled"] = str(adaptive).lower()
-    if extra_confs:
-        confs.update(extra_confs)
 
     for k, v in confs.items():
         builder = builder.config(k, v)

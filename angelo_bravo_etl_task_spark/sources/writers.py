@@ -1,4 +1,4 @@
-"""Writers — csv/parquet/jdbc sinks (SURVEY.md §2.1 S5-S9).
+"""Writers — csv/jdbc sinks (SURVEY.md §2.1 S5-S9).
 
 The reference's load() (Angelo_ETL_Task.py:276-374) is psycopg2 row-batched
 INSERTs plus a COPY-to-CSV export. Spark equivalents:
@@ -23,15 +23,6 @@ from pyspark.sql import functions as F
 
 #: SQLStates of "table does not exist": Derby, PostgreSQL
 _TABLE_NOT_FOUND_STATES = frozenset({"42X05", "42P01"})
-
-
-def write_parquet(
-    df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None
-) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
 
 
 def write_csv(

@@ -173,74 +173,3 @@ def sessionize_stateful(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-# =========================================================================
-# transformWithStateInPandas (Spark 4): the successor stateful API
-# =========================================================================
-
-TWS_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("sum_cents", LongType()),
-    ]
-)
-
-
-def user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals via ``transformWithStateInPandas`` — the
-    Spark 4 arbitrary-state API (successor to applyInPandasWithState, st1):
-    typed state handles (here one ValueState holding (n, sum_cents))
-    instead of a single opaque GroupState, composable multiple states per
-    key, timers, and TTL support. Each micro-batch updates the key's
-    ValueState and emits the key's new running totals (update semantics).
-
-    Input must carry ``user_id`` and integer ``cents``. Deterministic:
-    counts and integer sums are arrival-order-independent.
-
-    ENVIRONMENT GATE: executing this operator needs (a) the RocksDB state
-    store provider (``spark.sql.streaming.stateStore.providerClass``) and
-    (b) the ``protobuf`` package — the state server speaks a protobuf
-    protocol between the JVM and the Python driver worker. This container
-    ships neither protobuf nor a pip path, so the operator is exercised by
-    a unit test that SKIPS when protobuf is unavailable
-    (tests/test_streaming.py::test_transform_with_state_user_totals);
-    st1 (applyInPandasWithState) remains the oracle-checked custom-state
-    path. On a real cluster: ``pip install protobuf`` and set the RocksDB
-    provider, then this runs unchanged.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("s", LongType())]
-    )
-
-    class UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(
-            self, key, rows, timerValues
-        ) -> Iterator[pd.DataFrame]:
-            n, s = 0, 0
-            for pdf in rows:
-                n += len(pdf)
-                s += int(pdf["cents"].sum())
-            if self._state.exists():
-                prev_n, prev_s = self._state.get()
-                n, s = n + int(prev_n), s + int(prev_s)
-            self._state.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_cents": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserTotals(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

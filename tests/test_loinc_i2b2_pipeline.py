@@ -301,3 +301,79 @@ def test_last_wins_follows_file_order_across_splits(spark, tmp_path):
         assert r["C_FULLNAME"] == PATH_ROOT + "".join(
             f"\\({c}) {text[c]}" for c in to_root[code].split(".") + [code]
         )
+
+
+def test_spec_fullname_matches_reference_dicts(spark):
+    """Spec-mode C_FULLNAME equals a plain-Python build of the reference's
+    get_c_full_name (:30-48) over dicts from the hierarchy rows, last row
+    winning (pd.Series.to_dict), with per-segment names: a name missing
+    from the hierarchy, or NULL there, falls back to the code itself.
+    Compat mode repeats the leaf's name on every segment."""
+    import random
+
+    from pyspark.sql.types import StructField, StructType
+
+    rng = random.Random(11)
+    ancestors = [f"LPA{k}-0" for k in range(8)]
+    named = {a: f"anc {a}" for a in ancestors}
+    named["LPA3-0"] = None  # an ancestor whose CODE_TEXT is NULL
+    rows = [("", 1, None, a, named[a]) for a in ancestors]
+    rows.append(("", 2, None, "LPA5-0", "anc LPA5-0 renamed"))  # last wins
+    shared = "LPA0-0.LPA3-0.LPA9-9"  # LPA9-9 is absent from the hierarchy
+
+    def chain() -> str:
+        return ".".join(rng.sample(ancestors, rng.randint(1, 4)))
+
+    placements = []
+    for i in range(120):
+        code = f"{1000 + i}-{i % 10}"
+        for rep in range(rng.choice((1, 1, 2, 3))):  # duplicate placements
+            path = shared if i % 3 == 0 else chain()
+            text = None if i % 7 == 0 else f"leaf {i} v{rep}"  # NULL leaf text
+            placements.append((path, rep + 1, path.rsplit(".", 1)[-1], code, text))
+    rng.shuffle(placements)
+    rows += placements
+    ref_path, ref_name = {}, {}
+    for path, _, _, code, text in rows:  # file order: the last row wins
+        ref_path[code], ref_name[code] = path, text
+
+    def name(code: str) -> str:
+        return code if ref_name.get(code) is None else ref_name[code]
+
+    codes = sorted({p[3] for p in placements})
+    assert sum(ref_path[c] == shared for c in codes) >= 20
+    assert any(ref_name[c] is None for c in codes)
+    assert len(placements) > len(codes)
+
+    loinc = spark.createDataFrame(
+        [(c, "Comp", "P", "T", "S", "Qn", None, "ACTIVE") for c in codes],
+        LOINC_SCHEMA,
+    )
+    nullable = StructType(
+        [StructField(f.name, f.dataType, True) for f in HIERARCHY_SCHEMA]
+    )
+    hierarchy = spark.createDataFrame(rows, nullable).withColumn(
+        "_line_no", F.monotonically_increasing_id()
+    )
+
+    def fullnames(mode: str) -> dict[str, str]:
+        out = transform_loinc_to_i2b2(
+            loinc, hierarchy, mode=mode, hierarchy_order_col="_line_no"
+        )
+        return {
+            r["C_BASECODE"].removeprefix("LOINC:"): r["C_FULLNAME"]
+            for r in out.collect()
+        }
+
+    segments = {c: ref_path[c].split(".") + [c] for c in codes}
+    assert fullnames("spec") == {
+        c: PATH_ROOT + "".join(f"\\({s}) {name(s)}" for s in segments[c])
+        for c in codes
+    }
+    compat = fullnames("compat")
+    assert set(compat) == set(codes)
+    for c in codes:
+        if ref_name[c] is not None:
+            assert compat[c] == PATH_ROOT + "".join(
+                f"\\({s}) {ref_name[c]}" for s in segments[c]
+            )

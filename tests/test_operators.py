@@ -85,6 +85,39 @@ def test_last_wins(spark):
     out = {r["k"]: r["v"] for r in D.last_wins(df, ["k"], "ord").collect()}
     assert out == {"k1": "b", "k2": "c"}
 
+    # a NULL order ranks below any value (row_number over DESC puts it
+    # last), and a key whose only row has a NULL order keeps that row
+    nulls = spark.createDataFrame(
+        [(1, None, "a"), (1, 5, "b"), (2, None, "c")], "k INT, o INT, v STRING"
+    )
+    out = {r["k"]: r["v"] for r in D.last_wins(nulls, ["k"], "o").collect()}
+    assert out == {1: "b", 2: "c"}
+
+    # list order (r2's shape): the first column ties, the second decides
+    tie = spark.createDataFrame(
+        [(1, 7, 1, "lo"), (1, 7, 3, "hi"), (1, 6, 9, "older")],
+        "k INT, o1 INT, o2 INT, v STRING",
+    )
+    out = D.last_wins(tie, ["k"], ["o1", "o2"]).collect()
+    assert [r["v"] for r in out] == ["hi"]
+
+    # a payload column outside keys and order: names, order and types of
+    # the input columns survive the aggregate
+    wide = spark.createDataFrame(
+        [("x", 1.5, 1, 10), ("x", 2.5, 2, 20)],
+        "p STRING, amount DOUBLE, ord INT, k BIGINT",
+    )
+    got = D.last_wins(wide, ["k"], "ord")
+    assert [(f.name, f.dataType) for f in got.schema.fields] == [
+        (f.name, f.dataType) for f in wide.schema.fields
+    ]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        ("x", 1.5, 1, 10),
+        ("x", 2.5, 2, 20),
+    ]
+    got = D.last_wins(wide, ["p"], "ord").collect()
+    assert [tuple(r) for r in got] == [("x", 2.5, 2, 20)]
+
 
 def test_asof_join_backward(spark):
     quotes = spark.createDataFrame(
@@ -247,14 +280,6 @@ def test_frame_sampling(spark):
     assert all(len(bytes(f["frame_bytes"])) <= 1024 for f in frames)
 
 
-def test_binary_metadata(spark):
-    assets = spark.createDataFrame(
-        [(1, "image", bytearray(b"abc"), None, None)], MM.ASSET_SCHEMA
-    )
-    r = MM.attach_binary_metadata(assets).collect()[0]
-    assert r["content_length"] == 3
-
-
 def test_winnow_arrow_matches_column_spec(spark, sf_dir):
     """The Arrow winnowing fast path must produce EXACTLY the spec's
     fingerprints (hashlib.md5 ≡ engine md5 on utf-8 bytes)."""
@@ -328,16 +353,6 @@ def test_salted_join_equals_plain_join(spark):
         .collect()
     }
     assert salted == plain and len(plain) == 400
-
-
-def test_hash_sample_deterministic_and_partition_invariant(spark):
-    from angelo_bravo_etl_task_spark.operators.sampling import hash_sample
-
-    df = spark.range(0, 20000).select(F.col("id"))
-    a = {r["id"] for r in hash_sample(df, "id", 0.25).collect()}
-    b = {r["id"] for r in hash_sample(df.repartition(13), "id", 0.25).collect()}
-    assert a == b  # layout-invariant — df.sample() would fail this
-    assert 0.23 < len(a) / 20000 < 0.27
 
 
 def test_stratified_hash_sample_rates(spark):

@@ -173,14 +173,16 @@ def test_ct1_benchmark_side_broadcast_no_corpus_shuffle_join(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_px1_joins_broadcast_except_fact_regroup(spark, sf_dir):
-    """The LOINC->i2b2 pipeline: every hierarchy/dimension join must be
-    broadcast; the ONE SortMergeJoin allowed is the spec-mode
-    posexplode->regroup join back on LOINC_NUM (fact-sized on both sides,
-    where broadcast would be wrong at scale). No nested-loop fallbacks."""
+def test_px1_joins_all_broadcast_no_window(spark, sf_dir):
+    """The LOINC->i2b2 pipeline: every join is a broadcast of a
+    hierarchy-derived map (last-wins rows, child counts, spec-mode names
+    per distinct path), so the LOINC side is never shuffled; last-wins is
+    an aggregate, not a window. No SortMergeJoin, no Window node, no
+    nested-loop fallbacks."""
     df = QUERIES["px1_loinc_i2b2_pipeline"][0](spark, sf_dir)
     plan = physical_plan(df).split("== Initial Plan ==")[0]
-    assert plan.count("SortMergeJoin") == 1
+    assert plan.count("SortMergeJoin") == 0
+    assert "Window" not in plan
     assert plan.count("BroadcastHashJoin") >= 3
     assert "BroadcastNestedLoopJoin" not in plan
 

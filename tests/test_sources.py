@@ -20,7 +20,7 @@ from angelo_bravo_etl_task_spark.sources.staging import (
     LOINC_TABLE_URL,
     stage_loinc_inputs,
 )
-from angelo_bravo_etl_task_spark.sources.writers import write_csv, write_parquet
+from angelo_bravo_etl_task_spark.sources.writers import write_csv
 
 LOINC_CSV = """LOINC_NUM,COMPONENT,PROPERTY,TIME_ASPCT,SYSTEM,SCALE_TYP,METHOD_TYP,STATUS
 4548-4,Hemoglobin A1c/Hemoglobin.total,MFr,Pt,Bld,Qn,,ACTIVE
@@ -87,7 +87,7 @@ def test_parquet_roundtrip(spark, tmp_path):
         F.col("id"), (F.col("id") * 2).alias("doubled")
     )
     path = str(tmp_path / "rt_parquet")
-    write_parquet(df, path, partition_by=["doubled"])
+    df.write.partitionBy("doubled").parquet(path)
     back = read_parquet(spark, path)
     assert back.count() == 100
     assert set(back.columns) == {"id", "doubled"}

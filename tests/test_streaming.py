@@ -186,106 +186,6 @@ def test_stateful_sessionize_emission_boundary(spark, sf_dir):
     assert got == want and len(want) > 0
 
 
-def test_stream_to_jdbc_foreachbatch_sink(spark, sf_dir, tmp_path):
-    """Streaming twin of the reference load(): stream the events file,
-    foreachBatch-append every micro-batch to embedded Derby through the
-    SAME batch writer (write_jdbc), availableNow. Row count and a value
-    aggregate must survive the trip."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from angelo_bravo_etl_task_spark.streaming.sinks import stream_to_jdbc
-    from angelo_bravo_etl_task_spark.streaming.windows import (
-        stream_events_raw,
-        stream_partitions,
-    )
-
-    driver = "org.apache.derby.jdbc.EmbeddedDriver"
-    try:
-        spark._jvm.java.lang.Class.forName(driver)
-    except Exception:
-        _pytest.skip("Derby driver not on the Spark classpath")
-    url = f"jdbc:derby:{tmp_path}/db;create=true"
-
-    with stream_partitions(spark):
-        stream = stream_events_raw(spark, sf_dir).select(
-            "event_id", "event_type", "value"
-        )
-        stream_to_jdbc(
-            stream,
-            url,
-            "EVENTS_SINK",
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            num_partitions=2,
-            driver=driver,
-        )
-
-    back = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "EVENTS_SINK")
-        .option("driver", driver)
-        .load()
-    )
-    src = spark.read.parquet(f"{sf_dir}/events.parquet")
-    assert back.count() == src.count()
-    got = back.agg(F.sum(F.col("VALUE").cast("decimal(18,6)"))).collect()[0][0]
-    want = src.agg(F.sum(F.col("value").cast("decimal(18,6)"))).collect()[0][0]
-    assert got == want
-
-
-def test_transform_with_state_user_totals(spark, sf_dir):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API): per-user
-    running totals equal the batch group-by. SKIPS where the protobuf
-    package (required by the state-server protocol) is unavailable."""
-    pytest.importorskip("google.protobuf")
-    from pyspark.sql import functions as F
-
-    from angelo_bravo_etl_task_spark.sources.readers import load_table
-    from angelo_bravo_etl_task_spark.streaming.stateful import user_totals_tws
-    from angelo_bravo_etl_task_spark.streaming.windows import (
-        run_available_now,
-        stream_events_raw,
-        stream_partitions,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        with stream_partitions(spark):
-            stream = stream_events_raw(spark, sf_dir).select(
-                "user_id",
-                (F.col("value").cast("decimal(18,2)") * 100)
-                .cast("bigint")
-                .alias("cents"),
-            )
-            got = {
-                (r.user_id, r.n_events, r.sum_cents)
-                for r in run_available_now(
-                    user_totals_tws(stream), "tws_totals", output_mode="update"
-                ).collect()
-            }
-        expected = {
-            (r.user_id, r.n_events, r.sum_cents)
-            for r in load_table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(
-                    (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-                ).alias("sum_cents"),
-            )
-            .collect()
-        }
-        assert got == expected
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
     """Exactly-once across a query RESTART: a windowed streaming aggregate
     runs one micro-batch (maxFilesPerTrigger=1 over a 3-file staging dir),
